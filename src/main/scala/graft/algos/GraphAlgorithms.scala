@@ -1000,7 +1000,7 @@ object GraphAlgorithms {
                            n: Long): Int = {
     val base = spark.sessionState.conf.numShufflePartitions
     val perPart = spark.conf
-      .get("spark.graft.truss.edgesPerPartition", "50000").toLong
+      .get("spark.graft.truss.edgesPerPartition", "150000").toLong
     math.max(base, math.min(4096L, n / perPart).toInt)
   }
 

@@ -41,6 +41,8 @@ final class GraphAlgorithmHandle[K: ClassTag, VV: ClassTag, EV: ClassTag, M: Cla
   @volatile private var currentState: State.Value = State.Created
   @volatile private var lastResult: Option[Pregel.Result[K, VV, EV]] = None
   @volatile private var failure: Option[Throwable] = None
+  // published by the run after each superstep, read while it is RUNNING
+  @volatile private var progress: (Int, Long) = (0, 0L)
   private var configured = false
 
   /** Validate inputs / freeze configuration (the reference's
@@ -61,7 +63,7 @@ final class GraphAlgorithmHandle[K: ClassTag, VV: ClassTag, EV: ClassTag, M: Cla
     val p = Promise[RDD[(K, VV)]]()
     try {
       val res = Pregel.run(spark, cf, vertices, edges, configs, initialMessage,
-        maxIterations, numPartitions)
+        maxIterations, numPartitions, onSuperstep = (step, ms) => progress = (step, ms))
       lastResult = Some(res)
       currentState = if (res.state == "HALTED") State.Halted else State.Completed
       p.success(res.vertices)
@@ -76,8 +78,9 @@ final class GraphAlgorithmHandle[K: ClassTag, VV: ClassTag, EV: ClassTag, M: Cla
 
   /** Mirror of GraphAlgorithmState accessors. */
   def state: State.Value = currentState
-  def superstep: Int = lastResult.map(_.superstep).getOrElse(0)
-  def runningTimeMs: Long = lastResult.map(_.runningTimeMs).getOrElse(0L)
+  /** Supersteps completed so far — live while the run is in flight. */
+  def superstep: Int = lastResult.map(_.superstep).getOrElse(progress._1)
+  def runningTimeMs: Long = lastResult.map(_.runningTimeMs).getOrElse(progress._2)
   def aggregates: Map[String, Any] = lastResult.map(_.aggregates).getOrElse(Map.empty)
   def error: Option[Throwable] = failure
 

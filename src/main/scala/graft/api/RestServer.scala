@@ -6,7 +6,6 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 
 import graft.algos.compute.{AlgorithmRegistry, Cf}
@@ -18,17 +17,30 @@ import graft.algos.compute.{AlgorithmRegistry, Cf}
  *
  *   POST   /import?name=G&type=edges    body = "src dst value" text lines
  *                                       (GraphAlgorithmHandler.java:119-208)
- *   POST   /prepare?name=G[&partitions=N]   co-partition ("prepare", :210-251)
+ *   POST   /prepare?name=G[&partitions=N]   build and cache the vertex set
+ *                                       and per-source adjacency once
+ *                                       ("prepare", :210-251)
  *   POST   /pregel                      {"algorithm":"sssp","graph":"G",
  *                                        "configs":{...}} → {"id": appId}
  *                                       (configure, :253-393)
  *   POST   /pregel/{id}                 {"numIterations":N} → async run (:406-444)
- *   GET    /pregel/{id}                 state JSON incl. aggregates (:395-404)
+ *   GET    /pregel/{id}                 state JSON incl. aggregates and the
+ *                                       live superstep (:395-404)
  *   GET    /pregel/{id}/result          SSE stream of "data: id value" (:457-489)
  *   GET    /pregel/{id}/predict?user=U&item=I   svdpp rating prediction
  *                                       (tools/library/SvdppPredictor.java:76-138)
  *   GET    /pregel/{id}/configs         submission configs (:96-115 client side)
- *   DELETE /pregel/{id}                 drop the submission
+ *   DELETE /pregel/{id}                 drop the submission and its result
+ *
+ * Prepare hash-partitions the keyed edges (src, (dst, weight)) and the
+ * distinct vertex ids with one partitioner and caches both
+ * ([[AlgorithmRegistry.Prepared]]), so a run only shuffles its messages. A
+ * graph that was imported but not prepared is laid out the same way, lazily,
+ * by its first run. A finished run's vertex rows are collected once onto the
+ * driver and its cached Spark state released; result and predict render
+ * from those rows, with no Spark job, until DELETE. The server turns on
+ * TCP_NODELAY (the JDK's `sun.net.httpserver.nodelay`, unless already set):
+ * without it each response waits out the client's delayed ACK (~40 ms).
  *
  * The reference proxies configure/run/result across ZK-discovered group
  * members because state lives on many Kafka Streams hosts; the Spark driver
@@ -41,22 +53,27 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
       val algorithm: String, val graph: String,
       val configs: Map[String, Any]) {
     @volatile var state: String = "CREATED"
-    @volatile var outcome: AlgorithmRegistry.Outcome = _
+    // progress published by the run thread after each superstep
+    @volatile var superstep: Int = 0
+    @volatile var runningTimeMs: Long = 0L
+    @volatile var aggregates: Map[String, Any] = Map.empty
+    // the finished run's vertex rows in partition order, set before the
+    // terminal state
+    @volatile var rows: Array[(Long, Any)] = _
     @volatile var error: Option[String] = None
-    // predict-path memo: the trained model collected ONCE per completed
-    // submission (CF models are |users|+|items| rows — bounded, nothing like
-    // the raw graph), so per-request lookups are map hits, not RDD scans.
+    // predict-path memo over `rows` (CF models are |users|+|items| rows).
     // Benign if two requests race the init: same value either way.
     @volatile private var modelRows: Map[Long, Any] = _
     def model: Map[Long, Any] = {
-      if (modelRows == null) modelRows = outcome.vertices.collectAsMap().toMap
+      if (modelRows == null) modelRows = rows.toMap
       modelRows
     }
   }
 
-  private val graphs = new ConcurrentHashMap[String, RDD[(Long, Long, Double)]]()
+  private val graphs = new ConcurrentHashMap[String, AlgorithmRegistry.Prepared]()
   private val subs = new ConcurrentHashMap[String, Submission]()
 
+  RestServer.enableNoDelay()
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/import", ex => handle(ex)(doImport))
   server.createContext("/prepare", ex => handle(ex)(doPrepare))
@@ -94,8 +111,14 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), UTF_8)
 
+  /** Replace graph `name`, releasing the cached layouts it replaces. A
+    * job still reading them recomputes the missing blocks from lineage. */
+  private def install(name: String, g: AlgorithmRegistry.Prepared): Unit =
+    Option(graphs.put(name, g)).foreach(_.release())
+
   /** text lines "src dst value" → staged edge list (the reference's import
-    * writes parsed records to the initial topic; we parse to an RDD). */
+    * writes parsed records to the initial topic; we parse to an RDD). The
+    * cached layout is built by the first run unless /prepare builds it. */
   private def doImport(ex: HttpExchange): (Int, String, String) = {
     require(ex.getRequestMethod == "POST", "POST required")
     val q = query(ex)
@@ -105,12 +128,15 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
       val t = l.split("\\s+")
       (t(0).toLong, t(1).toLong, if (t.length > 2) t(2).toDouble else 1.0)
     }.toSeq
-    graphs.put(name, spark.sparkContext.parallelize(edges))
+    val sc = spark.sparkContext
+    install(name,
+      new AlgorithmRegistry.Prepared(sc.parallelize(edges), sc.defaultParallelism).persist())
     (200, "application/json", MiniJson.obj("graph" -> name, "edges" -> edges.size))
   }
 
-  /** co-partition the staged edges (the reference's group-edges-by-source
-    * prepare job, GraphUtils.java:152-253 — offset quiescence disappears). */
+  /** Build and cache the co-partitioned vertex set and adjacency now (the
+    * reference's group-edges-by-source prepare job, GraphUtils.java:152-253
+    * — offset quiescence disappears). */
   private def doPrepare(ex: HttpExchange): (Int, String, String) = {
     require(ex.getRequestMethod == "POST", "POST required")
     val q = query(ex)
@@ -119,10 +145,11 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
       .getOrElse(spark.sparkContext.defaultParallelism)
     val g = graphs.get(name)
     require(g != null, s"no imported graph '$name'")
-    graphs.put(name, g.keyBy(_._1)
-      .partitionBy(new org.apache.spark.HashPartitioner(parts))
-      .values.cache())
-    (200, "application/json", MiniJson.obj("graph" -> name, "partitions" -> parts))
+    val prepared = new AlgorithmRegistry.Prepared(g.edges, parts)
+    val (nEdges, nVertices) = prepared.materialize()
+    install(name, prepared)
+    (200, "application/json", MiniJson.obj("graph" -> name, "partitions" -> parts,
+      "edges" -> nEdges, "vertices" -> nVertices))
   }
 
   private def doPregel(ex: HttpExchange): (Int, String, String) = {
@@ -163,13 +190,19 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
       case _ => 30
     }
     sub.state = "RUNNING"
-    // async like the reference's CompletableFuture run (:406-444)
+    // async like the reference's CompletableFuture run (:406-444). The rows
+    // are collected and the run's cached state released before the
+    // terminal state is published, so a client that saw COMPLETED finds
+    // the result on the driver and no Spark state left behind.
     new Thread(() => {
       try {
-        val out = AlgorithmRegistry.runDetailed(
-          spark, sub.algorithm, graphs.get(sub.graph), sub.configs, maxIter)
-        out.vertices.cache().count()
-        sub.outcome = out
+        val out = AlgorithmRegistry.runDetailed(spark, sub.algorithm,
+          graphs.get(sub.graph), sub.configs, maxIter,
+          onSuperstep = (step, ms) => { sub.runningTimeMs = ms; sub.superstep = step })
+        try sub.rows = out.vertices.collect() finally out.unpersistState()
+        sub.aggregates = out.aggregates
+        sub.runningTimeMs = out.runningTimeMs
+        sub.superstep = out.superstep
         sub.state = out.state match {
           case "HALTED" => "HALTED"
           case _        => "COMPLETED"
@@ -188,13 +221,12 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
     require(sub != null, s"no submission $id")
     val base = Seq[(String, Any)]("id" -> id, "state" -> sub.state,
       "algorithm" -> sub.algorithm,
-      "superstep" -> Option(sub.outcome).map(_.superstep).getOrElse(0),
-      "runningTime" -> Option(sub.outcome).map(_.runningTimeMs).getOrElse(0L))
+      "superstep" -> sub.superstep,
+      "runningTime" -> sub.runningTimeMs)
     // final aggregates, stringified — GraphAlgorithmStatus.getAggregates
     // (the svdpp-predict tool reads overall-rating/edge-count from here)
-    val aggs = Option(sub.outcome).map(_.aggregates).getOrElse(Map.empty)
     val withAggs = base :+ ("aggregates" ->
-      (MiniJson.Raw(MiniJson.obj(aggs.toSeq.sortBy(_._1)
+      (MiniJson.Raw(MiniJson.obj(sub.aggregates.toSeq.sortBy(_._1)
         .map { case (k, v) => k -> (String.valueOf(v): Any) }: _*)): Any))
     val all = sub.error.map(e => withAggs :+ ("error" -> (e: Any))).getOrElse(withAggs)
     (200, "application/json", MiniJson.obj(all: _*))
@@ -207,10 +239,10 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
     require(sub != null, s"no submission $id")
     require(sub.state == "COMPLETED" || sub.state == "HALTED",
       s"result in state ${sub.state}")
+    // rendered from the rows held on the driver, in partition order; the
+    // whole body is built in memory (the rows already are)
     val sb = new StringBuilder
-    // toLocalIterator: one partition in driver memory at a time — the same
-    // incremental drain the reference's SSE store iteration does
-    sub.outcome.vertices.toLocalIterator.foreach { case (k, v) =>
+    sub.rows.foreach { case (k, v) =>
       sb.append("data: ")
         .append(MiniJson.obj("key" -> k, "value" -> MiniJson.render(v)))
         .append("\n\n")
@@ -249,11 +281,21 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
     def rating(key: String, dflt: Float): Float = sub.configs.get(key)
       .map(_.asInstanceOf[Number].floatValue()).getOrElse(dflt)
     val p = Cf.svdppPredictOne(
-      Cf.svdppMeanRating(sub.outcome.aggregates),
+      Cf.svdppMeanRating(sub.aggregates),
       uv.baseline, uv.factors, iv.baseline, iv.factors,
       rating("min.rating", 0.0f), rating("max.rating", 5.0f))
     (200, "application/json",
       MiniJson.obj("user" -> user, "item" -> item, "predicted" -> p))
+  }
+}
+
+object RestServer {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** The JDK server reads this property once, when its first server is
+    * created; a value the user set wins. */
+  private def enableNoDelay(): Unit = synchronized {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
   }
 }
 

@@ -64,6 +64,26 @@ object Pregel {
   /** Per-vertex outgoing edge (reference EdgeWithValue.java:23-74). */
   case class OutEdge[K, EV](target: K, value: EV)
 
+  /** A vertex's out-edges as parallel arrays, in edge order. With primitive
+    * K / EV (the registry's Long / Double) both are primitive arrays, so
+    * the cached adjacency holds no per-edge objects: it serializes in bulk,
+    * and the per-superstep cogroup's size sampling walks one array instead
+    * of three objects per edge. */
+  private final class Adj[K, EV](val targets: Array[K], val values: Array[EV])
+      extends Serializable {
+    def foreach(f: (K, EV) => Unit): Unit = {
+      var i = 0
+      while (i < targets.length) { f(targets(i), values(i)); i += 1 }
+    }
+    def iterator: Iterator[OutEdge[K, EV]] =
+      targets.indices.iterator.map(i => OutEdge(targets(i), values(i)))
+  }
+
+  private object Adj {
+    def apply[K: ClassTag, EV: ClassTag](edges: Iterable[(K, EV)]): Adj[K, EV] =
+      new Adj(edges.iterator.map(_._1).toArray, edges.iterator.map(_._2).toArray)
+  }
+
   /** Mirror of GraphAlgorithmState (GraphAlgorithmState.java:28-99).
     * `edges` is the final adjacency — observable because several algorithms'
     * primary output is mutated edge values (AdamicAdar/Jaccard/MaxBMatching). */
@@ -162,7 +182,7 @@ object Pregel {
       value: VV,
       halted: Boolean,
       msgs: Seq[(K, M)],
-      newAdj: Option[Array[OutEdge[K, EV]]],
+      newAdj: Option[Adj[K, EV]],
       aggContribs: Map[String, Any])
 
   /**
@@ -174,6 +194,9 @@ object Pregel {
    *   PregelGraphAlgorithm constructor arg; e.g. PageRank's
    *   resetProb/(1-resetProb)). None → every vertex starts active with an
    *   empty inbox (PregelComputation.java:253-273).
+   * @param onSuperstep progress callback on the driver after each finished
+   *   superstep: (supersteps completed so far, ms since the run started).
+   *   Lets a caller publish the live superstep while the run is in flight.
    */
   def run[K: ClassTag, VV: ClassTag, EV: ClassTag, M: ClassTag](
       spark: SparkSession,
@@ -184,7 +207,8 @@ object Pregel {
       initialMessage: Option[M] = None,
       maxIterations: Int = 30,
       numPartitions: Int = 0,
-      checkpointInterval: Int = 10): Result[K, VV, EV] = {
+      checkpointInterval: Int = 10,
+      onSuperstep: (Int, Long) => Unit = (_, _) => ()): Result[K, VV, EV] = {
 
     val t0 = System.currentTimeMillis()
     val n = if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism
@@ -201,31 +225,28 @@ object Pregel {
     // vertices without an inbox pass through untouched (same O(V) iterator
     // cost the old state-merge cogroup paid, but without a second job).
     //
-    // Per superstep exactly ONE job runs: a 4-way narrow-except-messages
-    // cogroup (prev carrier as state ⊕ message shuffle ⊕ self-activation ⊕
+    // Per superstep exactly ONE job runs: a 3-way narrow-except-messages
+    // cogroup (prev carrier's value and halt vote ⊕ message shuffle ⊕
     // adjacency) whose action is the per-partition aggregator/termination
     // collect. Scheduling overhead, not compute, is the floor for small
     // supersteps — and at cluster scale fewer barriers per superstep is
     // strictly better too.
+    //
+    // Inputs already hash-partitioned into `n` parts (a prepared graph,
+    // AlgorithmRegistry.Prepared) make the partitionBy and groupByKey below
+    // narrow: superstep 0 then shuffles only its messages.
     var carrier: RDD[(K, VertexOut[K, VV, EV, M])] =
       vertices.partitionBy(part)
         .mapValues(v => VertexOut[K, VV, EV, M](v, halted = false, Nil, None, Map.empty))
         .persist(Pregel.LoopStorage)
-    var adj: RDD[(K, Array[OutEdge[K, EV]])] = edges
-      .mapValues { case (dst, ev) => OutEdge(dst, ev) }
-      .groupByKey(part).mapValues(_.toArray).persist(Pregel.LoopStorage)
+    var adj: RDD[(K, Adj[K, EV])] = edges
+      .groupByKey(part).mapValues(Adj(_)).persist(Pregel.LoopStorage)
 
     val initMsgs: Seq[M] = initialMessage.toSeq
 
     var superstep = 0
     var done = false
     var finalState = "CONVERGED"
-    val timing = sys.env.contains("PREGEL_TIMING")
-    def t[T](label: String)(f: => T): T =
-      if (!timing) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[pregel] step=$superstep $label%-12s ${(System.nanoTime() - t0) / 1e9}%7.3f s"); r
-      }
 
     while (!done && superstep < maxIterations) {
       // Snapshot driver-side aggregator state for the executors.
@@ -247,14 +268,15 @@ object Pregel {
         .flatMap(_._2.msgs)
         .aggregateByKey(mutable.ArrayBuffer.empty[M], part)(
           (buf, m) => { buf += m; buf }, (a, b) => { a ++= b; a })
-      // Vertices that did not vote to halt stay active with an empty inbox
-      // (PregelComputation.java:764-770).
-      val selfActive: RDD[(K, Byte)] =
-        carrier.filter(!_._2.halted).mapValues(_ => 1: Byte)
+      // Only (value, halted) of the previous superstep enters the cogroup:
+      // its messages already left through `sent`, and the cogroup's
+      // in-memory map re-estimates its size by walking every object it
+      // holds, many times per task.
+      val state: RDD[(K, (VV, Boolean))] = carrier.mapValues(o => (o.value, o.halted))
 
       val prevCarrier = carrier
-      val out: RDD[(K, VertexOut[K, VV, EV, M])] = carrier
-        .cogroup(sent, selfActive, adj, part)
+      val out: RDD[(K, VertexOut[K, VV, EV, M])] = state
+        .cogroup(sent, adj, part)
         .mapPartitions({ partIt =>
           // per-task hooks around the partition's compute calls
           // (ComputeFunction.java preSuperstep/postSuperstep; the reference
@@ -266,24 +288,26 @@ object Pregel {
           // like reference hooks under Kafka Streams task restoration.
           val hookCtx = new HookContext(name => prevAggs.getOrElse(name, zeros(name)), merges)
           fn.preSuperstep(step, hookCtx)
-          val mapped = partIt.flatMap { case (id, (cIt, mIt, actIt, aIt)) =>
-          if (cIt.isEmpty) Iterator.empty // message to a nonexistent vertex: drop
+          val mapped = partIt.flatMap { case (id, (sIt, mIt, aIt)) =>
+          if (sIt.isEmpty) Iterator.empty // message to a nonexistent vertex: drop
           else {
-          val prev = cIt.head
+          val (prevValue, prevHalted) = sIt.head
           val inboxOpt: Option[Iterable[M]] =
             if (first) Some(initial)
             else if (mIt.nonEmpty) Some(mIt.head)
-            else if (actIt.nonEmpty) Some(Nil)
+            // a vertex that did not vote to halt stays active with an empty
+            // inbox (PregelComputation.java:764-770)
+            else if (!prevHalted) Some(Nil)
             else None
           Iterator.single(inboxOpt match {
             case None =>
               // skipped vertex: carry (value, halted) forward untouched
-              (id, VertexOut[K, VV, EV, M](prev.value, prev.halted, Nil, None, Map.empty))
+              (id, VertexOut[K, VV, EV, M](prevValue, prevHalted, Nil, None, Map.empty))
             case Some(inbox) =>
               // live adjacency map: callback mutations are visible to every
               // fresh iteration of `edgesView` (reference store semantics)
               val adjMap = mutable.LinkedHashMap.empty[K, EV]
-              if (aIt.nonEmpty) aIt.head.foreach(e => adjMap(e.target) = e.value)
+              if (aIt.nonEmpty) aIt.head.foreach((t, v) => adjMap(t) = v)
               val edgesView: Iterable[OutEdge[K, EV]] = new Iterable[OutEdge[K, EV]] {
                 // snapshot per iterator() call, like the reference's per-call
                 // store read — in-flight iteration is stable under mutation
@@ -291,11 +315,11 @@ object Pregel {
                   adjMap.toSeq.iterator.map { case (t, v) => OutEdge(t, v) }
               }
               val cb = new Callback[K, VV, EV, M](adjMap, prevAggs, zeros, merges)
-              fn.compute(step, id, prev.value, inbox, edgesView, cb)
+              fn.compute(step, id, prevValue, inbox, edgesView, cb)
               (id, VertexOut(
-                cb.newValue.getOrElse(prev.value), cb.halt,
+                cb.newValue.getOrElse(prevValue), cb.halt,
                 cb.msgs.toSeq,
-                if (cb.mutated) Some(adjMap.iterator.map { case (t, v) => OutEdge(t, v) }.toArray)
+                if (cb.mutated) Some(Adj(adjMap))
                 else None,
                 cb.aggContribs.toMap))
           })
@@ -348,7 +372,7 @@ object Pregel {
       // termination counters (replaces the reference's ZK aggregator
       // persistence + partition-activation tracking,
       // PregelComputation.java:860-905) ------------------------------------
-      val perPartition = t("superstep")(out.mapPartitions { it =>
+      val perPartition = out.mapPartitions { it =>
         val acc = mutable.HashMap.empty[String, Any]
         var mut = false
         var nMsgs = 0L
@@ -362,7 +386,7 @@ object Pregel {
           }
         }
         Iterator.single((acc.toMap, mut, nMsgs, nLive))
-      }.collect())
+      }.collect()
       val anyMutation = perPartition.exists(_._2)
       val active = perPartition.map(p => p._3 + p._4).sum
       val mergedAggs: Map[String, Any] =
@@ -391,7 +415,7 @@ object Pregel {
         val muts = out.filter(_._2.newAdj.isDefined).mapValues(_.newAdj.get)
         val newAdj = adj.fullOuterJoin(muts, part).mapValues {
           case (_, Some(updated)) => updated
-          case (oldOpt, None)     => oldOpt.getOrElse(Array.empty[OutEdge[K, EV]])
+          case (oldOpt, None)     => oldOpt.getOrElse(Adj[K, EV](Nil))
         }.persist(Pregel.LoopStorage)
         if (superstep > 0 && superstep % checkpointInterval == 0) {
           if (spark.sparkContext.getCheckpointDir.isDefined) newAdj.checkpoint()
@@ -399,7 +423,7 @@ object Pregel {
         }
         // materialize BEFORE unpersisting the parent (localCheckpoint
         // truncation safety), then release the old adjacency
-        t("adjMut")(newAdj.foreachPartition(_ => ()))
+        newAdj.foreachPartition(_ => ())
         adj.unpersist(false)
         adj = newAdj
       }
@@ -410,6 +434,7 @@ object Pregel {
       prevCarrier.unpersist(false)
       carrier = out
       superstep += 1
+      onSuperstep(superstep, System.currentTimeMillis() - t0)
 
       if (master.halted) { done = true; finalState = "HALTED" }
       else if (active == 0) { done = true; finalState = "CONVERGED" }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
 
 /**
@@ -33,18 +34,24 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
 object ScopedSession {
 
   /** Run `build` on `df` under `confs` overrides in a cloned session and
-    * return the result re-rooted in `df`'s own session. The caller must
-    * ensure `build` MATERIALIZES its result (e.g. an eager localCheckpoint):
-    * the returned frame's plan must not need the overridden confs again at
-    * execution time, because re-rooting restores the original session's
-    * conf for everything downstream. */
+    * return the result re-rooted in `df`'s own session. `build` must
+    * MATERIALIZE its result (e.g. an eager localCheckpoint): the returned
+    * frame's plan must not need the overridden confs again at execution
+    * time, because re-rooting restores the original session's conf for
+    * everything downstream. A result whose plan still has a leaf other
+    * than a materialized `LogicalRDD` fails with IllegalArgumentException. */
   def withConfs(df: DataFrame, confs: (String, String)*)(
       build: DataFrame => DataFrame): DataFrame = {
     val ss = df.sparkSession.asInstanceOf[ClassicSession]
     val scoped = ss.cloneSession()
     confs.foreach { case (k, v) => scoped.conf.set(k, v) }
     val reRooted = ClassicDataset.ofRows(scoped, df.queryExecution.logical)
-    val built = build(reRooted)
-    ClassicDataset.ofRows(ss, built.queryExecution.logical)
+    val plan = build(reRooted).queryExecution.logical
+    val lazyLeaves = plan.collectLeaves().filterNot(_.isInstanceOf[LogicalRDD])
+    require(lazyLeaves.isEmpty,
+      s"ScopedSession.withConfs: build returned an unmaterialized plan (leaves " +
+        s"${lazyLeaves.map(_.nodeName).distinct.mkString(", ")}); it must end in " +
+        "an eager checkpoint so the overrides are not needed at execution time")
+    ClassicDataset.ofRows(ss, plan)
   }
 }

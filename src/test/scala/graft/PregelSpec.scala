@@ -30,6 +30,19 @@ class PregelSpec extends SparkSpec {
     assert(res.state === "CONVERGED")
   }
 
+  test("progress callback reports supersteps 1..n in order on the driver") {
+    // a 21-vertex chain needs ~20 supersteps, so 6 never converge early
+    val verts = sc.parallelize((0L to 20L).map(i => (i, i)))
+    val edges = sc.parallelize((0L until 20L).map(i => (i, (i + 1, 1.0))))
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val res = Pregel.run(spark, new Wcc, verts, edges, maxIterations = 6,
+      onSuperstep = (step, ms) => seen += ((step, ms)))
+    assert(res.superstep === 6)
+    assert(seen.map(_._1) === (1 to 6))
+    assert(seen.map(_._2) === seen.map(_._2).sorted)
+    assert(seen.forall(_._2 >= 0L))
+  }
+
   test("pregel WCC on two chains → components 0 and 10") {
     val (verts, edges) = chains
     val res = Pregel.run(spark, new Wcc, verts, edges.mapValues { case (d, v) => (d, v) },

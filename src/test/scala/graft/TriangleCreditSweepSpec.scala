@@ -5,8 +5,8 @@ import scala.util.Random
 
 import graft.algos.TriangleCreditSweep
 
-/** Pins the three things the cogroup-style k-truss sweep depends on but
-  * cannot express in types:
+/** Pins the things the cogroup-style k-truss sweep depends on but cannot
+  * express in types:
   *
   *  1. SqlHashPartitioner replicates Catalyst's hashpartitioning —
   *     the fv-routing alignment the whole design rests on. A drift here
@@ -14,9 +14,9 @@ import graft.algos.TriangleCreditSweep
   *     it to one line on a Spark upgrade.
   *  2. Exact support equivalence vs a driver-side brute-force triangle
   *     count on random oriented graphs (the contract the r16 SQL sweep
-  *     satisfied: rows only for edges in ≥ 1 triangle, support exact).
-  *  3. The bounded credit accumulator's flush/resume path (tiny flush
-  *     limit forces mid-run drains) changes nothing.
+  *     satisfied: rows only for edges in ≥ 1 triangle, support exact),
+  *     with the hot fv tier on and off.
+  *  3. Empty and triangle-free inputs produce no rows.
   */
 class TriangleCreditSweepSpec extends SparkSpec {
   import spark.implicits._

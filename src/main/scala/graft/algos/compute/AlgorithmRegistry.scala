@@ -41,7 +41,7 @@ object AlgorithmRegistry {
     * time + terminal state + final aggregates (status.getAggregates — the
     * svdpp-predict tool reads the overall-rating/edge-count aggregators from
     * it) — the REST layer's state/result/predict verbs read it.
-    * `unpersistState()` releases the run's cached carrier and adjacency;
+    * `unpersistState()` releases the run's cached state and adjacency blocks;
     * call it once everything needed from `vertices` is materialized. */
   case class Outcome(vertices: RDD[(Long, Any)], superstep: Int,
                      runningTimeMs: Long, state: String,
@@ -55,7 +55,7 @@ object AlgorithmRegistry {
    * reference's prepare job (GraphUtils.groupEdgesBySourceAndRepartition):
    * `keyed` is (src, (dst, weight)) and `vertexIds` the distinct endpoint
    * ids, both hash-partitioned into `parts`. Pregel.run on the same
-   * partitioner then builds its carrier and adjacency without a shuffle.
+   * partitioner then builds its state and adjacency blocks without a shuffle.
    * `edges` is the raw list, for algorithms with their own layout (svdpp).
    */
   final class Prepared(val edges: RDD[(Long, Long, Double)], val parts: Int) {

@@ -3,7 +3,7 @@ package graft.pregel
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
@@ -16,26 +16,34 @@ import org.apache.spark.storage.StorageLevel
  * The reference needs ~2,000 LoC of topics, RocksDB stores, ZK leader latches
  * and offset-sync barriers because Kafka Streams has no synchronous stages.
  * Spark's stage boundary IS the superstep barrier, so the whole runtime is a
- * driver loop:
+ * driver loop over per-partition blocks (the layout GraphX uses):
  *
- *   per superstep: inbox ⋈ state ⋈ adjacency → compute per vertex →
- *   (new state, outgoing messages, edge mutations, aggregator contributions)
+ *  - adjacency: one CSR block per partition (vertex ids, offsets, targets,
+ *    edge values — primitive arrays for Long ids and Double weights), built
+ *    once per run. Inputs already hash-partitioned into `numPartitions`
+ *    parts (AlgorithmRegistry.Prepared) build it without a shuffle.
+ *  - state: one block per partition — values and halt bits by position,
+ *    the superstep's outgoing messages already bucketed by destination
+ *    partition, mutated out-edges, and the partition's aggregator merge.
  *
- * Scale design:
- *  - state / adjacency / inbox are all hash-partitioned on the vertex key with
- *    the SAME partitioner, so the per-superstep 3-way cogroup is narrow (zero
- *    shuffle); the only shuffle per superstep is grouping outgoing messages by
- *    destination — the unavoidable one (it replaces the reference's workSet
- *    topic round-trip through Kafka brokers, PregelComputation.java:797-801).
- *  - message lists per destination are combined map-side (reduceByKey-style
- *    append) — the reference ships full lists with no combiner
- *    (PregelComputation.java:751-753).
- *  - lineage is cut every `checkpointInterval` supersteps (the RocksDB
- *    solution-set store analog): localCheckpoint by default (fast, executor
- *    -local), or a RELIABLE `checkpoint()` to the configured
- *    `sc.setCheckpointDir` when one is set — at cluster scale an executor
- *    loss under localCheckpoint kills the job, so long-running production
- *    runs should set a checkpoint dir (HDFS/S3) and take the write cost.
+ *   per superstep: the previous state's outboxes → ONE shuffle of at most
+ *   n × n message blocks keyed by destination partition → zipPartitions
+ *   (state, adjacency, inbox blocks) → compute per vertex → next state
+ *   block; one collect of per-partition aggregates and termination counts.
+ *
+ * The message shuffle carries no aggregator and the zip no cogroup, so no
+ * per-record hash map (ExternalAppendOnlyMap) or size sampling sits on the
+ * superstep path. The inbox is merged through a partition-local id → index
+ * map in source-partition order, so every vertex sees its messages in the
+ * same order on every run and floating-point folds are reproducible. Edge
+ * mutations swap the mutated rows into a new adjacency block (narrow zip,
+ * built by the next superstep's job). Lineage is cut every
+ * `checkpointInterval` supersteps (the RocksDB solution-set store analog):
+ * localCheckpoint by default (fast, executor-local), or a RELIABLE
+ * `checkpoint()` to the configured `sc.setCheckpointDir` when one is set —
+ * at cluster scale an executor loss under localCheckpoint kills the job, so
+ * long-running production runs should set a checkpoint dir (HDFS/S3) and
+ * take the write cost.
  *
  * This layer keeps the reference's exact user contract — ComputeFunction with
  * voteToHalt, registered (persistent) aggregators, masterCompute, and in-flight
@@ -43,46 +51,26 @@ import org.apache.spark.storage.StorageLevel
  * express. Built-in analytics with fixed schemas use the DataFrame-native loops
  * in graft.algos instead (Catalyst/Tungsten path).
  *
- * It is implemented on pair-RDDs rather than Dataset[T] deliberately: K/VV/EV/M
+ * It is implemented on RDDs rather than Dataset[T] deliberately: K/VV/EV/M
  * are arbitrary user types (the reference serializes them with Kryo too,
- * utils/KryoSerde.java:56), per-vertex compute is imperative, and partitioner
- * reuse across supersteps — the key to zero-shuffle cogroups — is only
- * contractual at the RDD layer.
+ * utils/KryoSerde.java:56), per-vertex compute is imperative, and the
+ * positional zip of state and adjacency needs partition-for-partition
+ * alignment, which only the RDD layer exposes.
  */
 object Pregel {
 
-  /** Storage level for every loop-carried persist in the runtime (the
-    * carrier, adjacency and per-superstep `out`): SERIALIZED, for the same
-    * reason the DataFrame loops' checkpoints are (r16 "stabilization"
-    * finding, VERDICT r16 item 5): the next superstep's cogroup reads these
-    * blocks directly and a block being read is pinned un-evictable —
-    * deserialized row objects at ~2× the bytes starved execution memory at
-    * R-MAT drill scale. One extra deserialization pass per superstep is the
-    * price; semantics are storage-level-only. */
+  /** Storage level for the loop's cached blocks (state, adjacency):
+    * serialized, spilling to disk. A block is one record per partition, but
+    * its value and message arrays can hold per-vertex object graphs
+    * (SemiClustering's cluster sets, member lists in messages); serialized,
+    * the cache holds each block as bytes that are sized in one step and
+    * spill whole, instead of deserialized object graphs that starved
+    * execution memory at R-MAT drill scale. One deserialization pass per
+    * block per superstep is the price. */
   private[pregel] val LoopStorage = StorageLevel.MEMORY_AND_DISK_SER
 
   /** Per-vertex outgoing edge (reference EdgeWithValue.java:23-74). */
   case class OutEdge[K, EV](target: K, value: EV)
-
-  /** A vertex's out-edges as parallel arrays, in edge order. With primitive
-    * K / EV (the registry's Long / Double) both are primitive arrays, so
-    * the cached adjacency holds no per-edge objects: it serializes in bulk,
-    * and the per-superstep cogroup's size sampling walks one array instead
-    * of three objects per edge. */
-  private final class Adj[K, EV](val targets: Array[K], val values: Array[EV])
-      extends Serializable {
-    def foreach(f: (K, EV) => Unit): Unit = {
-      var i = 0
-      while (i < targets.length) { f(targets(i), values(i)); i += 1 }
-    }
-    def iterator: Iterator[OutEdge[K, EV]] =
-      targets.indices.iterator.map(i => OutEdge(targets(i), values(i)))
-  }
-
-  private object Adj {
-    def apply[K: ClassTag, EV: ClassTag](edges: Iterable[(K, EV)]): Adj[K, EV] =
-      new Adj(edges.iterator.map(_._1).toArray, edges.iterator.map(_._2).toArray)
-  }
 
   /** Mirror of GraphAlgorithmState (GraphAlgorithmState.java:28-99).
     * `edges` is the final adjacency — observable because several algorithms'
@@ -95,7 +83,7 @@ object Pregel {
       aggregates: Map[String, Any],
       state: String)(
       private val release: () => Unit) {
-    /** Unpersist the runtime's cached state (final carrier + adjacency).
+    /** Unpersist the runtime's cached state (final state + adjacency blocks).
       * Call after materializing everything derived from vertices/edges —
       * long sessions running many algorithms otherwise accumulate cached
       * blocks until LRU pressure. */
@@ -107,10 +95,8 @@ object Pregel {
     * `aggregate(name, value)` CONTRIBUTES to this superstep's merge —
     * reference parity with the Aggregators handle the hooks receive
     * (ComputeFunction.java preSuperstep/postSuperstep). Contributions buffer
-    * in the task and ride the partition's last vertex row into the
-    * superstep's aggregator fold, so they merge exactly once per task
-    * attempt that fully drains (an empty partition's hook contributions are
-    * dropped, like a reference stream task with no assigned partitions). */
+    * in the task and fold into the partition's merge after postSuperstep,
+    * after every vertex's, so they merge exactly once per task attempt. */
   final class HookContext private[pregel] (
       prev: String => Any,
       merges: Map[String, (Any, Any) => Any]) extends (String => Any) with Serializable {
@@ -144,46 +130,168 @@ object Pregel {
     * reference's callback writes the adjacency store in place and the edges
     * iterable re-reads the store on every iteration (PregelComputation.java
     * :756-764) — algorithms like MaxBMatching rely on seeing processUpdates'
-    * INCLUDED states during the same superstep's sendUpdates. */
+    * INCLUDED states during the same superstep's sendUpdates. Edges are read
+    * straight from the adjacency block until the first mutation copies the
+    * vertex's row into a keyed map. */
   final class Callback[K, VV, EV, M] private[pregel] (
-      private[pregel] val adj: mutable.LinkedHashMap[K, EV],
+      block: AdjBlock[K, EV],
+      row: Int,
+      out: Outbox[K, M],
       private[pregel] val aggValues: Map[String, Any],
       private[pregel] val zeros: Map[String, Any],
       private[pregel] val merges: Map[String, (Any, Any) => Any]) {
     private[pregel] var newValue: Option[VV] = None
     private[pregel] var halt = false
     private[pregel] var mutated = false
-    private[pregel] val msgs = mutable.ArrayBuffer.empty[(K, M)]
-    private[pregel] val aggContribs = mutable.HashMap.empty[String, Any]
+    private[pregel] var aggContribs: mutable.HashMap[String, Any] = null
 
-    def sendMessageTo(target: K, message: M): Unit = msgs += ((target, message))
+    private def from: Int = if (row < 0) 0 else block.offsets(row)
+    private def until: Int = if (row < 0) 0 else block.offsets(row + 1)
+    private def rowMap(): mutable.LinkedHashMap[K, EV] = {
+      val m = mutable.LinkedHashMap.empty[K, EV]
+      var j = from
+      while (j < until) { m(block.targets(j)) = block.values(j); j += 1 }
+      m
+    }
+    /** The vertex's out-edges as a live keyed map once mutated (or from the
+      * start for a row that repeats a target); null while unmutated. */
+    private[pregel] var adj: mutable.LinkedHashMap[K, EV] =
+      if (row >= 0 && block.dups.get(row)) rowMap() else null
+    private def edgeMap(): mutable.LinkedHashMap[K, EV] = {
+      if (adj == null) adj = rowMap()
+      adj
+    }
+
+    /** What compute() sees as `edges`: each iterator() call snapshots the
+      * current edges, like the reference's per-call store read — in-flight
+      * iteration is stable under mutation. */
+    private[pregel] val edges: Iterable[OutEdge[K, EV]] =
+      new scala.collection.AbstractIterable[OutEdge[K, EV]] {
+      def iterator: Iterator[OutEdge[K, EV]] =
+        if (adj != null) adj.toSeq.iterator.map { case (t, v) => OutEdge(t, v) }
+        else Iterator.range(from, until).map(j => OutEdge(block.targets(j), block.values(j)))
+      override def knownSize: Int = if (adj != null) adj.size else until - from
+    }
+
+    def sendMessageTo(target: K, message: M): Unit = out.add(target, message)
     def setNewVertexValue(value: VV): Unit = newValue = Some(value)
     def voteToHalt(): Unit = halt = true
     /** Graph mutation (ComputeFunction.java:222-247): in place, visible to
       * subsequent edge iteration within this compute() call. */
-    def addEdge(target: K, value: EV): Unit = { adj(target) = value; mutated = true }
-    def removeEdge(target: K): Unit = { adj.remove(target); mutated = true }
+    def addEdge(target: K, value: EV): Unit = { edgeMap()(target) = value; mutated = true }
+    def removeEdge(target: K): Unit = { edgeMap().remove(target); mutated = true }
     def setNewEdgeValue(target: K, value: EV): Unit =
-      if (adj.contains(target)) { adj(target) = value; mutated = true }
+      if (edgeMap().contains(target)) { adj(target) = value; mutated = true }
     /** Merged value from the PREVIOUS superstep (ComputeFunction.java:252-256). */
     def getAggregatedValue[T](name: String): T =
       aggValues.getOrElse(name, zeros(name)).asInstanceOf[T]
     /** Contribute to an aggregator for THIS superstep. */
     def aggregate[T](name: String, value: T): Unit = {
-      val merged = aggContribs.get(name) match {
-        case Some(prev) => merges(name)(prev, value)
-        case None       => merges(name)(zeros(name), value)
-      }
-      aggContribs(name) = merged
+      if (aggContribs == null) aggContribs = mutable.HashMap.empty
+      aggContribs(name) = merges(name)(aggContribs.getOrElse(name, zeros(name)), value)
     }
   }
 
-  private case class VertexOut[K, VV, EV, M](
-      value: VV,
-      halted: Boolean,
-      msgs: Seq[(K, M)],
-      newAdj: Option[Adj[K, EV]],
-      aggContribs: Map[String, Any])
+  /** One superstep over one partition: the body of the superstep's zip.
+    * `initial` is every vertex's inbox at superstep 0, null afterwards. */
+  private[pregel] final class Step[K: ClassTag, VV, EV: ClassTag, M: ClassTag](
+      fn: ComputeFunction[K, VV, EV, M],
+      superstep: Int,
+      initial: Seq[M],
+      prevAggs: Map[String, Any],
+      zeros: Map[String, Any],
+      merges: Map[String, (Any, Any) => Any],
+      part: Partitioner) extends Serializable {
+
+    private def fold(acc: mutable.HashMap[String, Any], name: String, v: Any): Unit =
+      acc(name) = acc.get(name).map(merges(name)(_, v)).getOrElse(v)
+
+    /** The inbox as CSR over state positions: vertex i's messages are
+      * msgs(start(i) until start(i + 1)), source partitions in ascending
+      * order — whatever order the shuffle read returned the blocks in. A
+      * message to an id that is not a vertex here is dropped. */
+    private def merge(n: Int, index: IdIndex[K],
+                      blocks: Iterator[(Int, (Int, MsgBlock[K, M]))]): (Array[Int], Array[M]) = {
+      val bySource = blocks.map(_._2).toArray.sortBy(_._1).map(_._2)
+      val at = new Array[Int](bySource.iterator.map(_.targets.length).sum)
+      val start = new Array[Int](n + 1)
+      var j = 0
+      bySource.foreach { b =>
+        var k = 0
+        while (k < b.targets.length) {
+          val p = index(b.targets(k))
+          at(j) = p
+          if (p >= 0) start(p + 1) += 1
+          j += 1; k += 1
+        }
+      }
+      var i = 0
+      while (i < n) { start(i + 1) += start(i); i += 1 }
+      val fill = java.util.Arrays.copyOf(start, n)
+      val msgs = new Array[M](start(n))
+      j = 0
+      bySource.foreach { b =>
+        var k = 0
+        while (k < b.msgs.length) {
+          val p = at(j)
+          if (p >= 0) { msgs(fill(p)) = b.msgs(k); fill(p) += 1 }
+          j += 1; k += 1
+        }
+      }
+      (start, msgs)
+    }
+
+    def apply(s: StateBlock[K, VV, EV, M], adj: AdjBlock[K, EV],
+              inbox: Iterator[(Int, (Int, MsgBlock[K, M]))]): StateBlock[K, VV, EV, M] = {
+      val ids = s.ids
+      val n = ids.length
+      val rows = adj.rowsOf(ids) // null: state position == adjacency row
+      val (start, msgs) = merge(n, if (rows == null) adj.index else IdIndex.of(ids), inbox)
+      val inboxes = scala.collection.immutable.ArraySeq.unsafeWrapArray(msgs).view
+      val values = s.values.clone()
+      val halted = s.halted.clone().asInstanceOf[java.util.BitSet]
+      val out = new Outbox[K, M](part)
+      val mutated = mutable.ArrayBuilder.make[Int]
+      val newEdges = mutable.ArrayBuffer.empty[Adj[K, EV]]
+      val aggs = mutable.HashMap.empty[String, Any]
+      var live = 0L
+      // per-task hooks around the partition's compute calls
+      // (ComputeFunction.java preSuperstep/postSuperstep; the reference runs
+      // them once per stream task per superstep). The function instance is
+      // task-local (closure deserialization), so hook state mutated here is
+      // visible to this task's compute() calls only. Hooks re-fire if a
+      // cached state block is recomputed (cache loss, task retry) — they
+      // must be idempotent, exactly like reference hooks under Kafka Streams
+      // task restoration.
+      val hooks = new HookContext(name => prevAggs.getOrElse(name, zeros(name)), merges)
+      fn.preSuperstep(superstep, hooks)
+      var i = 0
+      while (i < n) {
+        val messages: Iterable[M] =
+          if (initial != null) initial
+          else if (start(i + 1) > start(i)) inboxes.slice(start(i), start(i + 1))
+          // a vertex that did not vote to halt stays active with an empty
+          // inbox (PregelComputation.java:764-770)
+          else if (!s.halted.get(i)) Nil
+          else null // halted, no mail: skipped, (value, halted) carried over
+        if (messages != null) {
+          val cb = new Callback[K, VV, EV, M](adj, if (rows == null) i else rows(i), out,
+            prevAggs, zeros, merges)
+          fn.compute(superstep, ids(i), values(i), messages, cb.edges, cb)
+          cb.newValue.foreach(values(i) = _)
+          halted.set(i, cb.halt)
+          if (!cb.halt) live += 1
+          if (cb.mutated) { mutated += i; newEdges += Adj(cb.adj) }
+          if (cb.aggContribs != null) cb.aggContribs.foreach { case (k, v) => fold(aggs, k, v) }
+        }
+        i += 1
+      }
+      fn.postSuperstep(superstep, hooks)
+      hooks.contribs.foreach { case (k, v) => fold(aggs, k, v) }
+      new StateBlock(if (rows == null) adj.ids else ids, values, halted, out.blocks(),
+        mutated.result(), newEdges.toArray, aggs.toMap, out.sent + live)
+    }
+  }
 
   /**
    * Run `cf` until convergence (no active vertices), master halt, or
@@ -218,29 +326,28 @@ object Pregel {
     val master = new MasterCallback(slots, Map.empty)
     cf.init(configs, master)
 
-    // The loop keeps ONE co-partitioned pair RDD per superstep — the
-    // "carrier" — holding every vertex's (value, halted) plus that
-    // superstep's outputs (messages, edge mutations, aggregator
-    // contributions). The carrier doubles as the next superstep's state:
-    // vertices without an inbox pass through untouched (same O(V) iterator
-    // cost the old state-merge cogroup paid, but without a second job).
-    //
-    // Per superstep exactly ONE job runs: a 3-way narrow-except-messages
-    // cogroup (prev carrier's value and halt vote ⊕ message shuffle ⊕
-    // adjacency) whose action is the per-partition aggregator/termination
-    // collect. Scheduling overhead, not compute, is the floor for small
-    // supersteps — and at cluster scale fewer barriers per superstep is
-    // strictly better too.
-    //
+    def cut(rdd: RDD[_]): Unit =
+      // reliable when a checkpoint dir is configured (survives executor
+      // loss); executor-local truncation otherwise
+      if (spark.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint()
+      else rdd.localCheckpoint()
+
     // Inputs already hash-partitioned into `n` parts (a prepared graph,
-    // AlgorithmRegistry.Prepared) make the partitionBy and groupByKey below
-    // narrow: superstep 0 then shuffles only its messages.
-    var carrier: RDD[(K, VertexOut[K, VV, EV, M])] =
-      vertices.partitionBy(part)
-        .mapValues(v => VertexOut[K, VV, EV, M](v, halted = false, Nil, None, Map.empty))
-        .persist(Pregel.LoopStorage)
-    var adj: RDD[(K, Adj[K, EV])] = edges
-      .groupByKey(part).mapValues(Adj(_)).persist(Pregel.LoopStorage)
+    // AlgorithmRegistry.Prepared) make both partitionBy calls no-ops, so
+    // building the blocks shuffles nothing. The adjacency takes its vertex
+    // ids from the initial state block, so the two start out aligned.
+    var state: RDD[StateBlock[K, VV, EV, M]] = vertices.partitionBy(part)
+      .mapPartitions(it => Iterator.single(StateBlock.initial[K, VV, EV, M](it)),
+        preservesPartitioning = true)
+      .persist(LoopStorage)
+    var adj: RDD[AdjBlock[K, EV]] = state
+      .zipPartitions(edges.partitionBy(part), preservesPartitioning = true) { (s, e) =>
+        Iterator.single(AdjBlock.build(s.next().ids, e))
+      }.persist(LoopStorage)
+    // an adjacency swapped in after a mutation superstep is built (and cut,
+    // when due) by the next superstep's job; the one it replaces is released
+    // after that job
+    var retired: List[RDD[_]] = Nil
 
     val initMsgs: Seq[M] = initialMessage.toSeq
 
@@ -254,143 +361,47 @@ object Pregel {
       val merges: Map[String, (Any, Any) => Any] =
         slots.map { case (k, s) => k -> ((a: Any, b: Any) => s.agg.merge(a, b)) }.toMap
       val prevAggs = master.current
-      val step = superstep
-      val fn = cf
-      val first = superstep == 0
-      val initial = initMsgs
+      val step = new Step[K, VV, EV, M](cf, superstep,
+        if (superstep == 0) initMsgs else null, prevAggs, zeros, merges, part)
 
-      // Messages grouped by destination — the ONE shuffle per superstep
-      // (replaces the reference's workSet topic round-trip through Kafka
-      // brokers, PregelComputation.java:797-801); map-side combined into
-      // per-destination buffers (the reference ships uncombined lists,
-      // PregelComputation.java:751-753).
-      val sent: RDD[(K, mutable.ArrayBuffer[M])] = carrier
-        .flatMap(_._2.msgs)
-        .aggregateByKey(mutable.ArrayBuffer.empty[M], part)(
-          (buf, m) => { buf += m; buf }, (a, b) => { a ++= b; a })
-      // Only (value, halted) of the previous superstep enters the cogroup:
-      // its messages already left through `sent`, and the cogroup's
-      // in-memory map re-estimates its size by walking every object it
-      // holds, many times per task.
-      val state: RDD[(K, (VV, Boolean))] = carrier.mapValues(o => (o.value, o.halted))
-
-      val prevCarrier = carrier
-      val out: RDD[(K, VertexOut[K, VV, EV, M])] = state
-        .cogroup(sent, adj, part)
-        .mapPartitions({ partIt =>
-          // per-task hooks around the partition's compute calls
-          // (ComputeFunction.java preSuperstep/postSuperstep; the reference
-          // runs them once per stream task per superstep). The function
-          // instance is task-local (closure deserialization), so hook state
-          // mutated here is visible to this task's compute() calls only.
-          // Hooks re-fire if a persisted carrier partition is recomputed
-          // (cache eviction, task retry) — they must be idempotent, exactly
-          // like reference hooks under Kafka Streams task restoration.
-          val hookCtx = new HookContext(name => prevAggs.getOrElse(name, zeros(name)), merges)
-          fn.preSuperstep(step, hookCtx)
-          val mapped = partIt.flatMap { case (id, (sIt, mIt, aIt)) =>
-          if (sIt.isEmpty) Iterator.empty // message to a nonexistent vertex: drop
-          else {
-          val (prevValue, prevHalted) = sIt.head
-          val inboxOpt: Option[Iterable[M]] =
-            if (first) Some(initial)
-            else if (mIt.nonEmpty) Some(mIt.head)
-            // a vertex that did not vote to halt stays active with an empty
-            // inbox (PregelComputation.java:764-770)
-            else if (!prevHalted) Some(Nil)
-            else None
-          Iterator.single(inboxOpt match {
-            case None =>
-              // skipped vertex: carry (value, halted) forward untouched
-              (id, VertexOut[K, VV, EV, M](prevValue, prevHalted, Nil, None, Map.empty))
-            case Some(inbox) =>
-              // live adjacency map: callback mutations are visible to every
-              // fresh iteration of `edgesView` (reference store semantics)
-              val adjMap = mutable.LinkedHashMap.empty[K, EV]
-              if (aIt.nonEmpty) aIt.head.foreach((t, v) => adjMap(t) = v)
-              val edgesView: Iterable[OutEdge[K, EV]] = new Iterable[OutEdge[K, EV]] {
-                // snapshot per iterator() call, like the reference's per-call
-                // store read — in-flight iteration is stable under mutation
-                def iterator: Iterator[OutEdge[K, EV]] =
-                  adjMap.toSeq.iterator.map { case (t, v) => OutEdge(t, v) }
-              }
-              val cb = new Callback[K, VV, EV, M](adjMap, prevAggs, zeros, merges)
-              fn.compute(step, id, prevValue, inbox, edgesView, cb)
-              (id, VertexOut(
-                cb.newValue.getOrElse(prevValue), cb.halt,
-                cb.msgs.toSeq,
-                if (cb.mutated) Some(Adj(adjMap))
-                else None,
-                cb.aggContribs.toMap))
-          })
-          }
-          }
-          // One-element lookahead so postSuperstep fires after the LAST
-          // compute() and its hook contributions ride the final row's
-          // aggContribs into the superstep's aggregator fold. A task
-          // completion listener guarantees postSuperstep even if a consumer
-          // short-circuits the iterator (contributions are only folded on
-          // the normal full-drain path).
-          new Iterator[(K, VertexOut[K, VV, EV, M])] {
-            private var postFired = false
-            private def firePost(): Unit =
-              if (!postFired) { postFired = true; fn.postSuperstep(step, hookCtx) }
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => firePost()))
-            private var pending: (K, VertexOut[K, VV, EV, M]) =
-              if (mapped.hasNext) mapped.next() else { firePost(); null }
-            def hasNext: Boolean = pending != null
-            def next(): (K, VertexOut[K, VV, EV, M]) = {
-              if (pending == null) throw new NoSuchElementException
-              val cur = pending
-              if (mapped.hasNext) { pending = mapped.next(); cur }
-              else {
-                pending = null
-                firePost()
-                if (hookCtx.contribs.isEmpty) cur
-                else {
-                  val folded = hookCtx.contribs.foldLeft(cur._2.aggContribs) {
-                    case (acc, (k, v)) =>
-                      acc.updated(k, acc.get(k).map(merges(k)(_, v)).getOrElse(v))
-                  }
-                  (cur._1, cur._2.copy(aggContribs = folded))
-                }
-              }
-            }
-          }
-        }, preservesPartitioning = true).persist(Pregel.LoopStorage)
-
-      if (superstep > 0 && superstep % checkpointInterval == 0) {
-        // reliable when a checkpoint dir is configured (survives executor
-        // loss); executor-local truncation otherwise
-        if (spark.sparkContext.getCheckpointDir.isDefined) out.checkpoint()
-        else out.localCheckpoint()
-      }
-
-      // ---- THE superstep job: materializes `out` (and its localCheckpoint
-      // when due) and brings back per-partition aggregator merges plus the
-      // termination counters (replaces the reference's ZK aggregator
-      // persistence + partition-activation tracking,
-      // PregelComputation.java:860-905) ------------------------------------
-      val perPartition = out.mapPartitions { it =>
-        val acc = mutable.HashMap.empty[String, Any]
-        var mut = false
-        var nMsgs = 0L
-        var nLive = 0L
-        it.foreach { case (_, o) =>
-          if (o.newAdj.isDefined) mut = true
-          if (o.msgs.nonEmpty) nMsgs += o.msgs.size
-          if (!o.halted) nLive += 1
-          o.aggContribs.foreach { case (k, v) =>
-            acc(k) = acc.get(k).map(merges(k)(_, v)).getOrElse(v)
+      val prev = state
+      val next: RDD[StateBlock[K, VV, EV, M]] =
+        if (superstep == 0) prev.zipPartitions(adj, preservesPartitioning = true) { (s, a) =>
+          Iterator.single(step(s.next(), a.next(), Iterator.empty))
+        } else {
+          // THE shuffle of the superstep (replaces the reference's workSet
+          // topic round-trip through Kafka brokers,
+          // PregelComputation.java:797-801): each partition's outbox goes
+          // out as one block per destination partition, tagged with its
+          // source partition. `part` routes a destination partition index
+          // (an Int in [0, n)) to itself.
+          val inbox = prev.mapPartitionsWithIndex { (src, it) =>
+            val blocks = it.next().outbox
+            blocks.indices.iterator.filter(blocks(_) != null).map(dst => (dst, (src, blocks(dst))))
+          }.partitionBy(part)
+          prev.zipPartitions(adj, inbox, preservesPartitioning = true) { (s, a, m) =>
+            Iterator.single(step(s.next(), a.next(), m))
           }
         }
-        Iterator.single((acc.toMap, mut, nMsgs, nLive))
-      }.collect()
-      val anyMutation = perPartition.exists(_._2)
-      val active = perPartition.map(p => p._3 + p._4).sum
+      next.persist(LoopStorage)
+      val due = superstep > 0 && superstep % checkpointInterval == 0
+      if (due) cut(next)
+
+      // ---- THE superstep job: builds (and cuts, when due) the next state
+      // and the adjacency, and brings back per-partition aggregator merges
+      // plus the termination counters (replaces the reference's ZK
+      // aggregator persistence + partition-activation tracking,
+      // PregelComputation.java:860-905). The job ends in a zip of both, so
+      // checkpointing reaches a swapped-in adjacency even when `next` is
+      // itself marked for a cut in the same job. ------------------------------
+      val summaries = next.zipPartitions(adj)((s, _) => s)
+        .map(b => (b.aggs, b.mutated.nonEmpty, b.active))
+        .collect()
+      retired.foreach(_.unpersist(false))
+      retired = Nil
+      val active = summaries.map(_._3).sum
       val mergedAggs: Map[String, Any] =
-        perPartition.map(_._1).foldLeft(Map.empty[String, Any]) { (m, pm) =>
+        summaries.map(_._1).foldLeft(Map.empty[String, Any]) { (m, pm) =>
           pm.foldLeft(m) { case (acc, (k, v)) =>
             acc.updated(k, acc.get(k).map(merges(k)(_, v)).getOrElse(v))
           }
@@ -407,32 +418,22 @@ object Pregel {
         name -> v
       }.toMap
 
-      // ---- edge mutations (rebuild adjacency only when present) -----------
-      // Mutated vertices ship their full post-compute adjacency; others keep
-      // theirs — co-partitioned, narrow. Materialized in its own small job
-      // (mutation supersteps only) so the old adjacency can be released.
-      if (anyMutation) {
-        val muts = out.filter(_._2.newAdj.isDefined).mapValues(_.newAdj.get)
-        val newAdj = adj.fullOuterJoin(muts, part).mapValues {
-          case (_, Some(updated)) => updated
-          case (oldOpt, None)     => oldOpt.getOrElse(Adj[K, EV](Nil))
-        }.persist(Pregel.LoopStorage)
-        if (superstep > 0 && superstep % checkpointInterval == 0) {
-          if (spark.sparkContext.getCheckpointDir.isDefined) newAdj.checkpoint()
-          else newAdj.localCheckpoint()
-        }
-        // materialize BEFORE unpersisting the parent (localCheckpoint
-        // truncation safety), then release the old adjacency
-        newAdj.foreachPartition(_ => ())
-        adj.unpersist(false)
-        adj = newAdj
+      // ---- edge mutations: a narrow zip swaps the mutated rows in --------
+      if (summaries.exists(_._2)) {
+        val swapped = adj.zipPartitions(next, preservesPartitioning = true) { (a, s) =>
+          val b = s.next()
+          Iterator.single(a.next().swapped(b.ids, b.mutated, b.newEdges))
+        }.persist(LoopStorage)
+        if (due) cut(swapped)
+        retired = List(adj)
+        adj = swapped
       }
 
       // masterCompute between supersteps (PregelComputation.java:564-607).
       cf.masterCompute(superstep + 1, master)
 
-      prevCarrier.unpersist(false)
-      carrier = out
+      prev.unpersist(false)
+      state = next
       superstep += 1
       onSuperstep(superstep, System.currentTimeMillis() - t0)
 
@@ -441,13 +442,16 @@ object Pregel {
     }
     if (!done) finalState = "MAX_ITERATIONS"
 
-    val finalCarrier = carrier
+    val finalBlocks = state
     val finalAdj = adj
-    Result(carrier.mapValues(_.value),
-      adj.flatMap { case (src, out) => out.iterator.map(e => (src, e)) },
+    val held = retired
+    Result(
+      state.mapPartitions(_.flatMap(b => b.ids.indices.iterator.map(i => (b.ids(i), b.values(i)))),
+        preservesPartitioning = true),
+      adj.flatMap(_.edgeRows),
       superstep, System.currentTimeMillis() - t0,
       master.current, finalState)(
-      () => { finalCarrier.unpersist(false); finalAdj.unpersist(false) })
+      () => { finalBlocks.unpersist(false); finalAdj.unpersist(false); held.foreach(_.unpersist(false)) })
   }
 }
 
@@ -467,14 +471,13 @@ trait ComputeFunction[K, VV, EV, M] extends Serializable {
     * contributes to this superstep's merge (reference Aggregators-handle
     * parity). Instance state set here is task-local — use it to hoist
     * per-superstep work out of compute(). MUST be idempotent: the hook
-    * re-fires when a persisted partition is recomputed (retry/eviction). */
+    * re-fires when a cached state block is recomputed (retry/eviction). */
   def preSuperstep(superstep: Int, aggregates: Pregel.HookContext): Unit = {}
   /** Executor-side hook after a task's last compute() of the superstep
     * (ComputeFunction.java postSuperstep); may also contribute via
-    * `aggregates.aggregate`. Guaranteed to fire (task completion listener)
-    * even if the partition iterator is short-circuited, though
-    * contributions only fold in on the normal full-drain path. MUST be
-    * idempotent, like preSuperstep. */
+    * `aggregates.aggregate`; those contributions fold into the
+    * partition's merge after every vertex's. MUST be idempotent, like
+    * preSuperstep. */
   def postSuperstep(superstep: Int, aggregates: Pregel.HookContext): Unit = {}
   /** The vertex program (ComputeFunction.java:85-98). */
   def compute(

@@ -17,9 +17,9 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
  *    `Dataset.localCheckpoint` records `UnknownPartitioning` on its
  *    LogicalRDD leaf and silently discards the layout the whole loop relies
  *    on (verified in the committed r16 loop plan dumps);
- *  - sorted adjacency builds opt out of `ObjectHashAggregateExec` so a
- *    pre-sorted input streams through `SortAggregate` with no 128-key
- *    fallback re-sort.
+ *  - `TriangleCreditSweep.sweep` builds its keyed (u, v) layout with AQE
+ *    off, so the non-adaptive plan yields exactly `parts` hash partitions
+ *    in the order the sweep's partition-aligned zips consume.
  *
  * The r16 implementation set/restored the conf on the SHARED session
  * (`conf.set` + `finally` restore), which races against concurrent queries

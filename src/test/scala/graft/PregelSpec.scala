@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.rdd.RDD
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
+import org.apache.spark.{Dependency, ShuffleDependency}
+import org.apache.spark.rdd.{CoGroupedRDD, RDD}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+
+import graft.algos.compute.AlgorithmRegistry
 import graft.algos.compute.BasicAlgorithms._
 import graft.pregel.Pregel
 
@@ -200,6 +205,146 @@ class PregelSpec extends SparkSpec {
       prev.foreach(sc.setCheckpointDir)
     }
   }
+
+  /** An R-MAT-like 64-vertex graph with hubs and both edge directions,
+    * prepared (hash-partitioned into 4 parts) like a REST graph. */
+  private def preparedGraph(): AlgorithmRegistry.Prepared = {
+    val rnd = new scala.util.Random(7)
+    val pairs = (0 until 300).map { _ =>
+      val a = (rnd.nextInt(8) * rnd.nextInt(8)).toLong
+      (a, rnd.nextInt(64).toLong)
+    }.filter { case (a, b) => a != b }.distinct
+    val edges = pairs.flatMap { case (a, b) => Seq((a, b, 1.0 + a % 3), (b, a, 1.0 + a % 3)) }
+    val g = new AlgorithmRegistry.Prepared(sc.parallelize(edges, 3), 4)
+    g.materialize()
+    g
+  }
+
+  /** Per Spark job of the jobs run under `group` inside `body`: how many
+    * shuffle-map stages it ran (skipped stages are not run). A job's result
+    * stage is created after all its parents, so it holds the job's highest
+    * stage id; every other stage of the job is a shuffle-map stage. */
+  private def shuffleStagesPerJob(group: String)(body: => Unit): Seq[Int] = {
+    val jobOfStage = new ConcurrentHashMap[Int, Int]()
+    val mapStages = new ConcurrentHashMap[Int, Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` =>
+            jobs.add(e.jobId); mapStages.put(e.jobId, 0)
+            e.stageIds.filter(_ != e.stageIds.max).foreach(jobOfStage.put(_, e.jobId))
+          case g if g == group + "-close" => closed.countDown()
+          case _ => ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(jobOfStage.get(e.stageInfo.stageId)).foreach(mapStages.merge(_, 1, _ + _))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-close", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(closed.await(60, TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq.sorted.map(j => mapStages.get(j).intValue)
+  }
+
+  test("one shuffle-map stage per superstep; PageRank's mutation superstep adds none") {
+    val g = preparedGraph()
+    try {
+      for ((algo, configs) <- Seq("wcc" -> Map.empty[String, Any],
+                                  "pagerank" -> Map[String, Any]("tolerance" -> 0.0))) {
+        var steps = 0
+        val perJob = shuffleStagesPerJob(s"pregel-stages-$algo") {
+          val out = AlgorithmRegistry.runDetailed(spark, algo, g, configs, 5)
+          steps = out.superstep
+          out.unpersistState()
+        }
+        assert(steps === 5, algo)
+        // one job per superstep; a prepared graph builds its blocks without a
+        // shuffle, so superstep 0 runs none and every later one exactly one
+        assert(perJob === Seq(0, 1, 1, 1, 1), algo)
+      }
+    } finally g.release()
+  }
+
+  test("no superstep lineage holds a cogroup or an aggregating shuffle") {
+    def walk(deps: Seq[Dependency[_]], seen: Set[Int]): Set[Int] =
+      deps.foldLeft(seen) { (acc, d) =>
+        assert(!d.rdd.isInstanceOf[CoGroupedRDD[_]], d.rdd.toDebugString)
+        d match {
+          case s: ShuffleDependency[_, _, _] =>
+            assert(s.aggregator.isEmpty && !s.mapSideCombine, d.rdd.toDebugString)
+          case _ => ()
+        }
+        if (acc(d.rdd.id)) acc else walk(d.rdd.dependencies, acc + d.rdd.id)
+      }
+    val (verts, edges) = chains
+    val cf = new PageRank(tolerance = 0.0, resetProbability = 0.15)
+    val res = Pregel.run(spark, cf, verts.mapValues(_ => (0.0, 0.0)), edges,
+      initialMessage = Some(PageRank.initialMessage(0.15)), maxIterations = 6)
+    assert(res.superstep === 6)
+    val seen = walk(res.vertices.dependencies ++ res.edges.dependencies, Set.empty)
+    assert(seen.size > 12) // six supersteps of un-cut lineage were walked
+    res.unpersistState()
+  }
+
+  test("two PageRank runs give bit-identical ranks (deterministic inbox order)") {
+    val g = preparedGraph()
+    try {
+      def ranks(): Map[Long, Any] = {
+        val out = AlgorithmRegistry.runDetailed(spark, "pagerank", g,
+          Map("tolerance" -> 0.0), 12)
+        try out.vertices.collect().toMap finally out.unpersistState()
+      }
+      val a = ranks()
+      assert(a.size > 30)
+      assert(ranks() === a)
+    } finally g.release()
+  }
+
+  test("executor-loss drill with edge mutation: PageRank recovers adjacency and state") {
+    val verts = sc.parallelize((0L to 20L).map(i => (i, (0.0, 0.0))), 3)
+    val edges = sc.parallelize((0L until 20L).flatMap(i =>
+      Seq((i, (i + 1, 1.0)), (i, ((i * 7) % 21, 1.0)))).filter { case (s, (d, _)) => s != d }, 3)
+    def run(cf: PageRank): (Map[Long, (Double, Double)], Set[(Long, Long, Double)], Int) = {
+      val res = Pregel.run(spark, cf, verts, edges,
+        initialMessage = Some(PageRank.initialMessage(0.15)), maxIterations = 12,
+        numPartitions = 4, checkpointInterval = 3)
+      try (res.vertices.collect().toMap,
+        res.edges.collect().map { case (s, e) => (s, e.target, e.value) }.toSet, res.superstep)
+      finally res.unpersistState()
+    }
+    val undisturbed = run(new PageRank(tolerance = 0.0, resetProbability = 0.15))
+    val dir = java.nio.file.Files.createTempDirectory("pregel-fault-mut").toString
+    val prev = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try {
+      val preexisting = sc.getPersistentRDDs.keySet
+      var injected = false
+      // total cache loss after superstep 7: state recomputes from the
+      // superstep-6 reliable checkpoint, the adjacency (mutated at superstep
+      // 0, never cut) from its lineage
+      PregelFaultHook.onSuperstep7 = () => if (!injected) {
+        injected = true
+        sc.getPersistentRDDs
+          .filter { case (id, _) => !preexisting.contains(id) }
+          .values.foreach(_.unpersist(blocking = true))
+      }
+      val recovered = run(new FaultyPageRank)
+      assert(injected, "fault was never injected — superstep count changed?")
+      assert(recovered._3 === 12)
+      assert(recovered === undisturbed)
+      assert(undisturbed._2.filter(_._1 == 3L).map(_._3) === Set(0.5)) // normalized
+    } finally {
+      PregelFaultHook.onSuperstep7 = () => ()
+      prev.foreach(sc.setCheckpointDir)
+    }
+  }
 }
 
 /** Driver-side fault hook for the executor-loss drill, JVM-static so the
@@ -211,6 +356,14 @@ object PregelFaultHook {
 
 /** Sssp that fires [[PregelFaultHook]] from masterCompute at superstep 7. */
 class FaultySssp extends graft.algos.compute.BasicAlgorithms.Sssp(0L) {
+  override def masterCompute(superstep: Int, cb: Pregel.MasterCallback): Unit = {
+    super.masterCompute(superstep, cb)
+    if (superstep == 7) PregelFaultHook.onSuperstep7()
+  }
+}
+
+/** PageRank that fires [[PregelFaultHook]] from masterCompute at superstep 7. */
+class FaultyPageRank extends graft.algos.compute.BasicAlgorithms.PageRank(0.0, 0.15) {
   override def masterCompute(superstep: Int, cb: Pregel.MasterCallback): Unit = {
     super.masterCompute(superstep, cb)
     if (superstep == 7) PregelFaultHook.onSuperstep7()

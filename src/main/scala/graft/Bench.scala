@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+import graft.obs.{EntryMetrics, QueryMetrics}
+import graft.obs.QueryMetrics.{jsonStr, secs}
 object Bench {
   /** (1, 5, 15)-minute load averages from /proc/loadavg ((-1,-1,-1)
     * off-Linux) — emitted before AND after the run so a judge can spot a
@@ -17,9 +19,9 @@ object Bench {
       (f(0).toDouble, f(1).toDouble, f(2).toDouble)
     } catch { case NonFatal(_) => (-1.0, -1.0, -1.0) }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadBefore = loadAvg()
+  /** The session Bench and `graft.tools.Profile` share: `local[n]` with n
+    * shuffle partitions, n from SPARK_GRAFT_CPUS (default 4). */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -27,8 +29,13 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warmup: touch every table + run one tiny query so JIT/classloading/
-    // parquet-footer reads don't land on whichever query happens to go first
+    spark
+  }
+
+  /** Touches every table and runs one tiny query so JIT, classloading and
+    * parquet-footer reads don't land on whichever entry happens to go
+    * first. */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events", "documents", "embeddings"))
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
@@ -47,46 +54,49 @@ object Bench {
         .bucketBy(2, "id").sortBy("id").saveAsTable("bench_warmup")
       spark.sql("DROP TABLE IF EXISTS bench_warmup")
     } catch { case NonFatal(_) => () }
-    // NOTE: no cache-clearing between queries — SparkEntry memoizes shared
-    // graph/neighborhood prep as localCheckpoints ON PURPOSE (a deployment
-    // materializes those once per graph), and unpersisting a localCheckpoint
-    // truncates its lineage permanently, silently breaking every later query
-    // that shares it. A failed query must be VISIBLE, not a fast -1.
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    // Shared prep (derived graphs + prepared neighborhoods) is materialized
-    // FIRST and reported as explicit prep:<name> entries, so each g_* number
-    // below is the query's own cost instead of whichever query touched a
-    // cold memoized cache first (cross-round per-query deltas were noise
-    // before this: r6's g_skew_adamic read 32 s in-bench vs 1.5 s warm).
-    val prepResults = SparkEntry.sharedPrep.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir) }
-      catch { case NonFatal(e) => failed += s"prep:$name: ${e.getMessage}" }
-      s"prep:$name" -> (System.nanoTime() - t0) / 1e9
+  }
+
+  /** The gate in run order, each entry returning its row count (0 for
+    * prep). Shared prep (derived graphs + prepared neighborhoods) comes
+    * FIRST as explicit prep:<name> entries, so each g_* number is the
+    * query's own cost instead of whichever query touched a cold memoized
+    * cache first (cross-round per-query deltas were noise before this:
+    * r6's g_skew_adamic read 32 s in-bench vs 1.5 s warm). Queries follow
+    * in SORTED name order, not Map hash order: a Map's iteration order
+    * reshuffles whenever the query set grows, which silently changes every
+    * query's predecessor (JIT/GC/cache state) between rounds.
+    * NOTE: no cache-clearing between entries — SparkEntry memoizes shared
+    * prep as localCheckpoints ON PURPOSE, and unpersisting a
+    * localCheckpoint truncates its lineage permanently, silently breaking
+    * every later query that shares it. */
+  def gateEntries(spark: SparkSession, sfDir: String): Seq[(String, () => Long)] =
+    SparkEntry.sharedPrep.map { case (name, fn) =>
+      s"prep:$name" -> (() => { fn(spark, sfDir); 0L })
+    } ++ SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> (() => fn(spark, sfDir).count())
     }
-    // SORTED name order, not Map hash order: a Map's iteration order
-    // reshuffles whenever the query set grows, which silently changes every
-    // query's predecessor (JIT/GC/cache state) between rounds and made two
-    // rounds of per-query deltas look like regressions that were not there.
-    // Sorted order is deterministic forever, so cross-round per-query
-    // comparison stays apples-to-apples.
-    val results = prepResults ++
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // GC OUTSIDE the timed window: 193 consecutive workloads in one JVM
-      // otherwise make each query pay the allocation debt of its
-      // predecessors (measured r11: up to +11 s on g_kcore vs isolated,
-      // +1–4 s spread over the iterative family) — the same attribution
-      // rule as the explicit prep entries, applied to heap garbage
+
+  /** Runs `entries` one at a time through `qm`. GC runs OUTSIDE each timed
+    * window: consecutive workloads in one JVM otherwise make each entry pay
+    * the allocation debt of its predecessors (measured r11: up to +11 s on
+    * g_kcore vs isolated). A failed entry is reported, never skipped
+    * silently, and the next entry still runs. */
+  def runEntries(qm: QueryMetrics, entries: Seq[(String, () => Long)])
+      : Seq[EntryMetrics] =
+    entries.map { case (name, run) =>
       System.gc()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case NonFatal(e) => failed += s"$name: ${e.getMessage}"; -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      val m = qm.measure(name)(run())
+      m.error.foreach(e => Console.err.println(s"[bench] FAILED $name: $e"))
+      m
     }
-    failed.foreach(f => Console.err.println(s"[bench] FAILED $f"))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val loadBefore = loadAvg()
+    val spark = session()
+    warmup(spark, sfDir)
+    val metrics = runEntries(QueryMetrics.attach(spark.sparkContext),
+      gateEntries(spark, sfDir))
     val loadAfter = loadAvg()
     // self-adjudication: pre-existing load means some OTHER process was
     // competing for the cores when the run started, or just had been (a
@@ -111,8 +121,7 @@ object Bench {
       Console.err.println(f"[bench] WARNING: pre-run load ${loadBefore._1}%.2f/" +
         f"${loadBefore._2}%.2f/${loadBefore._3}%.2f (1/5/15 min) - host is " +
         "contaminated; timings unreliable")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","load":{"before":${loadJson(loadBefore)},"after":${loadJson(loadAfter)}},"contaminated":$contaminated}"""
+    val line = fullJson(metrics, sfDir, loadBefore, loadAfter, contaminated)
     // The full per-query map goes to BENCH_FULL.json (cwd plus the repo
     // dir — overridable for non-default checkouts — in case the harness
     // launches from elsewhere); stdout gets only the short summary line,
@@ -126,8 +135,7 @@ object Bench {
     // Artifact-honesty gate (VERDICT r13 "what's wrong" #1): a contaminated
     // run must never DISPLACE clean committed evidence. If this run is
     // contaminated and the existing file on disk is a clean run, divert to
-    // BENCH_FULL_dirty.json — the stdout line above still carries the full
-    // result (stamped contaminated:true) for whoever captures it.
+    // BENCH_FULL_dirty.json.
     // field-level probe, not a substring match on one exact serialization:
     // tolerate whitespace around the colon however the JSON was written
     def existingIsClean(path: String): Boolean =
@@ -156,23 +164,27 @@ object Bench {
           java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dirty))
       } catch { case NonFatal(_) => () }
     }
-    println(summaryLine(results.toSeq, sfDir, loadBefore, loadAfter, contaminated, written.headOption))
+    println(summaryLine(metrics.map(m => m.name -> m.wallS), sfDir, loadBefore, loadAfter, contaminated, written.headOption))
     spark.stop()
   }
 
-  // millisecond precision: full double precision tripled the line length
-  // and overflowed the stdout-tail capture, leaving the artifact
-  // unparseable (BENCH_r07 "parsed": null)
-  private def fmt(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
   private def loadJson(l: (Double, Double, Double)): String =
-    s"[${fmt(l._1)},${fmt(l._2)},${fmt(l._3)}]"
+    s"[${secs(l._1)},${secs(l._2)},${secs(l._3)}]"
 
   private def utf8Len(s: String): Int = s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
 
-  private def jsonStr(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  /** BENCH_FULL.json: the total, the per-entry wall map ("queries", prep
+    * entries included), sf, load and contamination stamp, and "metrics" —
+    * one `EntryMetrics` record per entry, keyed by name. */
+  def fullJson(metrics: Seq[EntryMetrics], sf: String,
+               loadBefore: (Double, Double, Double), loadAfter: (Double, Double, Double),
+               contaminated: Boolean): String = {
+    val qs = metrics.map(m => s"${jsonStr(m.name)}:${secs(m.wallS)}").mkString("{", ",", "}")
+    val ms = metrics.map(m => s"${jsonStr(m.name)}:${m.json}").mkString("{\n", ",\n", "\n}")
+    s"""{"metric":"total","value":${secs(metrics.map(_.wallS).sum)},"unit":"sec",""" +
+      s""""queries":$qs,"sf":${jsonStr(sf)},"load":{"before":${loadJson(loadBefore)},""" +
+      s""""after":${loadJson(loadAfter)}},"contaminated":$contaminated,"metrics":$ms}"""
+  }
 
   /** Byte budget of the summary line. */
   val SummaryMax = 500
@@ -187,7 +199,7 @@ object Bench {
                   loadBefore: (Double, Double, Double), loadAfter: (Double, Double, Double),
                   contaminated: Boolean, fullPath: Option[String]): String = {
     def line(sfText: String): String =
-      s"""{"metric":"total","value":${fmt(results.map(_._2).sum)},"unit":"sec",""" +
+      s"""{"metric":"total","value":${secs(results.map(_._2).sum)},"unit":"sec",""" +
         s""""n_queries":${results.size},""" +
         s""""sf":${jsonStr(sfText)},"load":{"before":${loadJson(loadBefore)},""" +
         s""""after":${loadJson(loadAfter)}},"contaminated":$contaminated,""" +

@@ -435,7 +435,7 @@ object SparkEntry {
   // 1e5-hub gate fixtures) driving the iterative peel/propagation family,
   // so iteration count and shuffle growth across a genuine scale step are
   // MEASURED in the SHUFFLE artifact instead of argued from plan shape.
-  // ShuffleProfile's full-gate mode appends these as drill:* rows after the
+  // graft.tools.Profile's full-gate mode appends these as drill:* rows after the
   // gate sweep; Verify/Bench ignore them, so the correctness gate stays
   // 100% hash-exact-oracled and bench numbers keep their cross-round
   // comparability.
@@ -2204,7 +2204,7 @@ object SparkEntry {
         .map(r => (r.getLong(0), (r.getLong(1), 1.0))).persist()
       val verts = g.vertices.select(col("id")).rdd
         .map(r => (r.getLong(0), 0L)).persist()
-      // 8 partitions: the graph is ~1e5 rows at sf0.1 — per-superstep cogroup
+      // 8 partitions: the graph is ~1e5 rows at sf0.1 — per-superstep stage
       // scheduling dominates at the default 32 (same tuning as g_maxbmatching)
       val vc = Pregel.run(s, new VertexCount, verts, edges,
         numPartitions = 8, maxIterations = 3)

@@ -57,21 +57,6 @@ object GraphAlgorithms {
   private def barrier(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.StatsBarrier.freshLeaf(df)
 
-  /** Dev hook (GRAFT_EXPLAIN_ROUNDS=1): print the FORMATTED plan of one
-    * loop-internal step per tag — the per-round plan evidence the final
-    * checkpointed leaf of an iterative algorithm cannot show (committed
-    * under plans/r16 as loop_*_{before,after}.txt). */
-  private val explainedTags =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** `df` is BY-NAME: when the env hook is unset (every production run)
-    * the step plan is never even constructed — the analyzer work of
-    * building a throwaway DataFrame per loop otherwise runs on every
-    * invocation (ADVICE r16 #2). */
-  private def dbgExplain(tag: String, df: => DataFrame): Unit =
-    if (sys.env.contains("GRAFT_EXPLAIN_ROUNDS") && explainedTags.add(tag))
-      println(s"=== ROUND PLAN [$tag] ===\n" + df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-
   /** Materialize a message relation hash-partitioned AND sorted by the
     * per-round join key, ONCE: every superstep's edges⋈frontier join then
     * re-shuffles (and re-sorts) only the (shrinking) frontier side instead
@@ -85,27 +70,21 @@ object GraphAlgorithms {
     * restores the per-round exchange; the non-adaptive plan captures
     * hashpartitioning(key, session shuffle partitions), exactly the
     * number later frontier exchanges co-partition to. */
+  private val KeyedMinBytes = 32L * 1024 * 1024
   private def cpKeyed(edges: DataFrame, key: String): DataFrame = {
     // SIZE GATE (VERDICT r16 item 3): on a toy graph the eager
     // repartition+sort+checkpoint is pure overhead — the per-round
     // edges⋈frontier join broadcasts the (even smaller) frontier side
     // anyway, so the keyed layout buys nothing and its fixed cost showed
     // up as a systematic 15–50% regression across the whole frontier
-    // family at sf0.1. Below the (conf-parameterized) size estimate we
+    // family at sf0.1. Below a 32 MB size estimate (KeyedMinBytes) we
     // keep the r15 shape: a plain eager checkpoint. The estimate is the
     // optimizer's sizeInBytes — for the parquet-backed gate graphs and
     // the generator-backed drill graphs it is ballpark-correct, and a
     // wrong guess only costs speed in one direction (a huge graph
     // mis-read as small runs the r15 per-round-exchange plan; a small one
     // mis-read as huge pays one needless sort), never correctness.
-    val minBytes = edges.sparkSession.conf
-      .get("spark.graft.keyedCheckpoint.minBytes", (32L * 1024 * 1024).toString)
-      .toLong
-    val est = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sys.env.contains("GRAFT_KEYED_DEBUG"))
-      println(s"[cpKeyed] key=$key estBytes=$est minBytes=$minBytes " +
-        s"keyed=${est >= minBytes}")
-    if (est < minBytes) cp(edges)
+    if (edges.queryExecution.optimizedPlan.stats.sizeInBytes < KeyedMinBytes) cp(edges)
     else
       // AQE off for this ONE eager materialization, via a CLONED session
       // (ScopedSession) so the override is invisible to concurrent queries
@@ -154,8 +133,6 @@ object GraphAlgorithms {
     var iter = 0
     var active = 1L
     while (active > 0 && iter < maxIterations) {
-      if (iter == 0) dbgExplain("frontier-step0", step(state))
-      if (iter == 1) dbgExplain("frontier-step", step(state))
       val newState = barrier(cpLazy(step(state)))
       iter += 1
       if (iter % convergenceCheckEvery == 0 || iter >= maxIterations) {
@@ -996,12 +973,11 @@ object GraphAlgorithms {
     * the r16 sweep — the trade carries over). Derived from the CURRENT
     * edge set each sweep — a constant tuned to either local mode or one
     * cluster size is exactly what the guide's §2 warns against. */
+  private val TrussEdgesPerPartition = 150000L
   private def supportParts(spark: org.apache.spark.sql.SparkSession,
                            n: Long): Int = {
     val base = spark.sessionState.conf.numShufflePartitions
-    val perPart = spark.conf
-      .get("spark.graft.truss.edgesPerPartition", "150000").toLong
-    math.max(base, math.min(4096L, n / perPart).toInt)
+    math.max(base, math.min(4096L, n / TrussEdgesPerPartition).toInt)
   }
 
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = 100,
@@ -1082,8 +1058,7 @@ object GraphAlgorithms {
     // (~150k live edges per partition, supportParts below). Returns
     // ALREADY materialized (serialized localCheckpoint).
     def sweepDir(dirE: DataFrame, parts: Int): DataFrame =
-      TriangleCreditSweep.sweep(dirE, parts,
-        sup => dbgExplain("ktruss-sweep", sup))
+      TriangleCreditSweep.sweep(dirE, parts)
     def prep(eCanon: DataFrame): UndirectedNeighborhood =
       prepareNeighborhoodFromEdges(
         eCanon.select(col("a").as("src"), col("b").as("dst")),
@@ -1152,7 +1127,6 @@ object GraphAlgorithms {
         .select(col("a"), col("b"),
           (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
     }
-    val dbg = sys.env.contains("GRAFT_TRUSS_DEBUG")
     var e = barrier(cpSer(canonicalEdges(edges)))   // (a, b): the current set
     if (corePrefilter && k >= 4) {
       // k-truss ⊆ (k−1)-core (every truss vertex keeps degree ≥ k−1
@@ -1181,8 +1155,6 @@ object GraphAlgorithms {
     var iter = 0
     var result: DataFrame = null
     while (result == null && iter < maxIter) {
-      val t0 = System.nanoTime()
-      var mode = ""
       // The per-round plan choice is a cost model, not a fixed phase order:
       //  - an (oriented) SWEEP ships every SURVIVING edge's forward list —
       //    degeneracy-bounded, the cheap per-edge constant;
@@ -1205,7 +1177,7 @@ object GraphAlgorithms {
       if (supExact != null) {
         val removed = supExact.filter(col("support") < k - 2)
         val nR = removed.count()
-        if (nR == 0L) { result = supExact; mode = "converged" }
+        if (nR == 0L) result = supExact
         else {
           val surv = supExact.filter(col("support") >= k - 2)
           if (nR >= SweepMajority * n) {
@@ -1214,12 +1186,10 @@ object GraphAlgorithms {
             // triangles
             e = surv.select(col("a"), col("b")); supExact = null
             dirE = null // re-orient from the current survivor degrees
-            mode = "fallback"
           } else {
             supExact = barrier(cpSer(decremented(
               supExact.select(col("a"), col("b")), removed, surv, n)))
             e = supExact.select(col("a"), col("b"))
-            mode = "incremental"
           }
           n -= nR
         }
@@ -1238,14 +1208,12 @@ object GraphAlgorithms {
         val swept = barrier(sweepDir(dirE, supportParts(edges.sparkSession, n)))
         val f = swept.filter(col("support") >= k - 2)
         val n2 = f.count()
-        if (n2 == n) { result = f; mode = "converged" } // incl. n == 0
-        else if (n2 == 0L) { result = f; mode = "empty" }
+        if (n2 == n || n2 == 0L) result = f // converged (incl. n == 0) or empty
         else if (n - n2 >= SweepMajority * n) {
           e = f.select(col("a"), col("b")); n = n2
           dirE = barrier(cpSer(dirE.join(f.select(col("a"), col("b")),
             least(col("u"), col("v")) === col("a") &&
               greatest(col("u"), col("v")) === col("b"), "left_semi")))
-          mode = "full"
         } else {
           // swept.filter(< k−2) omits support-0 removals by construction —
           // they destroy no triangles, so the witness enumeration loses
@@ -1255,7 +1223,6 @@ object GraphAlgorithms {
             e, swept.filter(col("support") < k - 2), f, n)))
           e = supExact.select(col("a"), col("b")); n = n2
           dirE = null
-          mode = "full->incremental"
         }
       } else {
         // rebuildFraction == 0: the pure-full-sweep reference mode the
@@ -1263,12 +1230,9 @@ object GraphAlgorithms {
         val p = prep(e)
         val f = barrier(cp(supportOf(p).filter(col("support") >= k - 2)))
         val n2 = f.count()
-        if (n2 == n) { result = f; mode = "converged" } // incl. n == 0
-        else if (n2 == 0L) { result = f; mode = "empty" }
-        else { e = f.select(col("a"), col("b")); n = n2; mode = "full" }
+        if (n2 == n || n2 == 0L) result = f // converged (incl. n == 0) or empty
+        else { e = f.select(col("a"), col("b")); n = n2 }
       }
-      if (dbg) println(f"[ktruss] round=$iter mode=$mode e=$n " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2f s")
       iter += 1
     }
     if (result == null) {
@@ -1310,9 +1274,7 @@ object GraphAlgorithms {
       .groupBy(col("id")).agg(count(lit(1)).as("d"))))
     var iter = 0
     var result: DataFrame = null
-    val dbg = sys.env.contains("GRAFT_CORE_DEBUG")
     while (result == null && iter < maxIter) {
-      val t0 = System.nanoTime()
       val removed = d.filter(col("d") < k)
       val nR = removed.count()
       if (nR == 0L) result = d
@@ -1329,8 +1291,6 @@ object GraphAlgorithms {
           .select(col("id"),
             (col("d") - coalesce(col("dec"), lit(0L))).as("d"))))
       }
-      if (dbg) println(f"[kcore] round=$iter removed=$nR " +
-        f"t=${(System.nanoTime() - t0) / 1e9}%.2f s")
       iter += 1
     }
     if (result == null) {
@@ -1411,7 +1371,6 @@ object GraphAlgorithms {
     var iter = 0
     var done = cur._1 == 0L // edgeless/empty graph: nothing to propagate
     while (!done && iter < maxIterations) {
-      if (iter == 1) dbgExplain("hyperball-step", hbStep(edges, state, regCols))
       val next = barrier(cp(hbStep(edges, state, regCols)))
       val ns = stats(next)
       iter += 1

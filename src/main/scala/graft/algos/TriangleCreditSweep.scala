@@ -304,11 +304,8 @@ private[graft] object TriangleCreditSweep {
     * the exact contract of the r16 join-based sweep. The result is
     * returned ALREADY materialized (serialized localCheckpoint) so the
     * keyed edge checkpoint backing the computation can be unpersisted
-    * here instead of leaking until a GC sweep. `explain` receives the
-    * final-aggregate frame before materialization (the GRAFT_EXPLAIN_ROUNDS
-    * hook). */
-  def sweep(dirE: DataFrame, parts: Int,
-            explain: DataFrame => Unit = _ => ()): DataFrame = {
+    * here instead of leaking until a GC sweep. */
+  def sweep(dirE: DataFrame, parts: Int): DataFrame = {
     val spark = dirE.sparkSession
     // keyed layout: hash(u) → partition, sorted (u, v); AQE off for the one
     // eager materialization (cpKeyed's UnknownPartitioning discovery — here
@@ -399,17 +396,6 @@ private[graft] object TriangleCreditSweep {
             else pids.iterator.map(pid => (pid, (v, arr)))
           }
         }
-      if (sys.env.contains("GRAFT_SWEEP_DEBUG")) {
-        val edges = eRdd.count()
-        val dem = demand.count()
-        val (coldLists, coldEntries) = fvShip
-          .map { case (_, (_, arr)) => (1L, arr.length.toLong) }
-          .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-        println(f"[sweep-debug] parts=$parts edges=$edges demandPairs=$dem " +
-          f"hotCut=$effCut hotLists=$hotListCount hotEntries=$hotEntryCount " +
-          f"coldListsShipped=$coldLists coldEntriesShipped=$coldEntries " +
-          f"coldEntriesPerTask=${if (parts > 0) coldEntries / parts else 0}")
-      }
       val routedFv = fvShip.partitionBy(new IdPartitioner(parts))
       val credits: RDD[InternalRow] =
         eRdd.zipPartitions(routedFv) { (edgeIt, fvIt) =>
@@ -418,7 +404,6 @@ private[graft] object TriangleCreditSweep {
       val sup = InternalDF.ofInternalRows(spark, credits, creditSchema)
         .groupBy(col("a"), col("b"))
         .agg(coalesce(sum(col("c")), lit(0L)).as("support"))
-      explain(sup)
       // materialize BEFORE unpersisting the keyed blocks the zip reads
       val out = sup.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
       hotBc.destroy() // one sweep = one broadcast lifetime

@@ -53,4 +53,34 @@ class BenchSpec extends AnyFunSuite {
     val cutSf = json.get("sf").asText
     assert(cutSf.startsWith("...") && sf.endsWith(cutSf.stripPrefix("...")) && cutSf.length < sf.length)
   }
+
+  test("BENCH_FULL.json keeps the wall map and adds one metrics record per entry") {
+    import graft.obs.{EntryMetrics, TaskTotals}
+    val metrics = Seq(
+      EntryMetrics("prep:star", None, 1.25, 0L, 3L, Nil, 4L,
+        TaskTotals(tasks = 8L, shuffleWriteBytes = 1024L, peakExecMemBytes = 65536L)),
+      EntryMetrics("g_wcc", None, 2.0004, 42L, 5L, Nil, 7L, TaskTotals(tasks = 12L, cpuNs = 1500000000L)),
+      EntryMetrics("q\"bad", Some("java.lang.RuntimeException: no\nway"), 0.5, -1L, 1L, Nil, 1L,
+        TaskTotals()))
+    val json = new ObjectMapper().readTree(
+      Bench.fullJson(metrics, "/data/sf0.01", load, load, contaminated = false))
+    assert(math.abs(json.get("value").asDouble - 3.750) < 1e-9)
+    val qs = json.get("queries")
+    assert(qs.size === 3)
+    assert(qs.get("prep:star").asDouble === 1.25)
+    assert(qs.get("g_wcc").asDouble === 2.0)
+    assert(qs.get("q\"bad").asDouble === 0.5)
+    val ms = json.get("metrics")
+    assert(ms.size === 3)
+    val star = ms.get("prep:star")
+    assert(star.get("name").asText === "prep:star" && star.get("ok").asBoolean)
+    assert(star.get("jobs").asLong === 3L && star.get("stages").asLong === 4L)
+    assert(star.get("tasks").asLong === 8L && star.get("shuffle_write_bytes").asLong === 1024L)
+    assert(star.get("peak_exec_memory_bytes").asLong === 65536L)
+    assert(ms.get("g_wcc").get("executor_cpu_s").asDouble === 1.5)
+    assert(ms.get("g_wcc").get("rows").asLong === 42L)
+    val bad = ms.get("q\"bad")
+    assert(!bad.get("ok").asBoolean && bad.get("error").asText.endsWith("no\nway"))
+    assert(json.get("sf").asText === "/data/sf0.01" && !json.get("contaminated").asBoolean)
+  }
 }

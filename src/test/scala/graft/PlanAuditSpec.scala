@@ -78,8 +78,8 @@ class PlanAuditSpec extends SparkSpec {
     // pattern), an explicit limit, or a literal relation. Enforce the
     // r8 audit's conclusion (true then by inspection) over every gated
     // query so a refactor reintroducing a corpus-sized global sort fails
-    // the suite. The same single pass pins the NLJ audit from
-    // tools/PlanAudit: zero cartesian products anywhere, and nested-loop
+    // the suite. The same single pass pins the NLJ audit (once a separate
+    // PlanAudit main): zero cartesian products anywhere, and nested-loop
     // joins only in the allowlisted benign set above — a new NLJ shape
     // fails here instead of on the next cluster run.
     val dir = "/root/testdata/sf0.001"

@@ -8,7 +8,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 
-import graft.pregel.{ComputeFunction, Pregel}
+import graft.pregel.{ComputeFunction, Pregel, Tasks}
 
 /**
  * Named-algorithm registry — the reference's GraphAlgorithmType enum
@@ -59,17 +59,15 @@ object AlgorithmRegistry {
    * `edges` is the raw list, for algorithms with their own layout (svdpp).
    */
   final class Prepared(val edges: RDD[(Long, Long, Double)], val parts: Int) {
+    require(parts >= 1, s"partitions must be at least 1, got $parts")
     // one shuffle lays out both: each edge goes to its source's partition
     // and a bare id to its destination's
-    private val routed: RDD[(Long, Option[(Long, Double)])] = edges
-      .flatMap { case (s, d, w) => Iterator((s, Some((d, w))), (d, None)) }
-      .partitionBy(new HashPartitioner(parts))
-    val keyed: RDD[(Long, (Long, Double))] = routed.mapPartitions(
-      _.collect { case (s, Some(e)) => (s, e) }, preservesPartitioning = true)
-    val vertexIds: RDD[(Long, Unit)] = routed.mapPartitions({ it =>
-      val seen = mutable.HashSet.empty[Long]
-      it.collect { case (id, _) if seen.add(id) => (id, ()) }
-    }, preservesPartitioning = true)
+    private val routed: RDD[(Long, Option[(Long, Double)])] =
+      edges.flatMap(new RouteEdge).partitionBy(new HashPartitioner(parts))
+    val keyed: RDD[(Long, (Long, Double))] =
+      routed.mapPartitions(new KeyedEdges, preservesPartitioning = true)
+    val vertexIds: RDD[(Long, Unit)] =
+      routed.mapPartitions(new DistinctIds, preservesPartitioning = true)
 
     /** Cache both layouts; the first job that reads them builds them. */
     def persist(): this.type = {
@@ -82,13 +80,27 @@ object AlgorithmRegistry {
       * (edges, vertices). */
     def materialize(): (Long, Long) = {
       persist()
-      val counts = keyed.zipPartitions(vertexIds) { (e, v) =>
-        Iterator.single((e.size.toLong, v.size.toLong))
-      }.collect()
+      val counts = Tasks.collect(keyed.zipPartitions(vertexIds)(new Sizes))
       (counts.map(_._1).sum, counts.map(_._2).sum)
     }
 
     def release(): Unit = { keyed.unpersist(false); vertexIds.unpersist(false) }
+  }
+
+  object Prepared {
+    /** Edges per partition of a layout sized to its graph. At REST scale a
+      * Spark task costs a few ms of scheduling for about 1 ms of superstep
+      * work, so a small graph runs fastest as one task per stage. The sweep
+      * in plans/rest_layout/ (registry bfs and pagerank, 1 and 2 clients,
+      * local[4]) found one partition best or tied up to 25k directed edges
+      * under two clients, and one slower than two from 110k on. */
+    private val EdgesPerPartition = 50000L
+
+    /** Partitions for a graph of `edgeCount` edges: one per
+      * EdgesPerPartition edges, at least 1 and at most `maxParts`. */
+    def partitionsFor(edgeCount: Long, maxParts: Int): Int =
+      math.min(maxParts.toLong,
+        math.max(1L, (edgeCount + EdgesPerPartition - 1) / EdgesPerPartition)).toInt
   }
 
   /**
@@ -112,9 +124,8 @@ object AlgorithmRegistry {
                   configs: Map[String, Any],
                   maxIterations: Int,
                   onSuperstep: (Int, Long) => Unit = (_, _) => ()): Outcome = {
-    def verts[V](init: Long => V): RDD[(Long, V)] =
-      graph.vertexIds.mapPartitions(_.map { case (id, _) => (id, init(id)) },
-        preservesPartitioning = true)
+    def verts[V]: RDD[(Long, V)] =
+      graph.vertexIds.mapPartitions(new InitialValues[V](algorithm), preservesPartitioning = true)
     def srcId: Long = configs("srcVertexId").asInstanceOf[Number].longValue()
     def pregel[VV: ClassTag, M: ClassTag](cf: ComputeFunction[Long, VV, Double, M],
                                           vertices: RDD[(Long, VV)],
@@ -122,32 +133,33 @@ object AlgorithmRegistry {
       val r = Pregel.run(spark, cf, vertices, graph.keyed, initialMessage = initialMessage,
         maxIterations = maxIterations, numPartitions = graph.parts,
         onSuperstep = onSuperstep)
-      Outcome(r.vertices.map { case (k, v) => (k, v: Any) },
+      // RDD is invariant: (Long, VV) rows are (Long, Any) rows
+      Outcome(r.vertices.asInstanceOf[RDD[(Long, Any)]],
         r.superstep, r.runningTimeMs, r.state, r.aggregates)(() => r.unpersistState())
     }
 
     algorithm match {
       case "bfs" =>
-        pregel(new BasicAlgorithms.Bfs(srcId), verts(_ => Long.MaxValue))
+        pregel(new BasicAlgorithms.Bfs(srcId), verts[Long])
       case "sssp" =>
-        pregel(new BasicAlgorithms.Sssp(srcId), verts(_ => Double.PositiveInfinity))
+        pregel(new BasicAlgorithms.Sssp(srcId), verts[Double])
       case "wcc" =>
-        pregel(new BasicAlgorithms.Wcc, verts(id => id))
+        pregel(new BasicAlgorithms.Wcc, verts[Long])
       case "lp" =>
-        pregel(new BasicAlgorithms.Lp, verts(id => id))
+        pregel(new BasicAlgorithms.Lp, verts[Long])
       case "lcc" =>
-        pregel(new AdvancedAlgorithms.Lcc, verts(_ => 1.0))
+        pregel(new AdvancedAlgorithms.Lcc, verts[Double])
       case "mssp" =>
         val landmarks = configs("landmarkVertexIds") match {
           case s: Set[_] => s.map(_.asInstanceOf[Number].longValue())
           case s: Seq[_] => s.map(_.asInstanceOf[Number].longValue()).toSet
         }
-        pregel(new BasicAlgorithms.Mssp(landmarks), verts(_ => Map.empty[Long, Double]))
+        pregel(new BasicAlgorithms.Mssp(landmarks), verts[Map[Long, Double]])
       case "pagerank" =>
         val tol = configs.getOrElse("tolerance", 0.0001).asInstanceOf[Number].doubleValue()
         val reset = configs.getOrElse("resetProbability", 0.15).asInstanceOf[Number].doubleValue()
         val src = configs.get("srcVertexId").map(_.asInstanceOf[Number].longValue())
-        pregel(new BasicAlgorithms.PageRank(tol, reset, src), verts(_ => (0.0, 0.0)),
+        pregel(new BasicAlgorithms.PageRank(tol, reset, src), verts[(Double, Double)],
           Some(BasicAlgorithms.PageRank.initialMessage(reset)))
       case "svdpp" =>
         // bipartite ratings: input edges are (user, item, rating); CfId keys
@@ -170,4 +182,45 @@ object AlgorithmRegistry {
         throw new IllegalArgumentException(s"Unsupported algorithm type: $other")
     }
   }
+}
+
+// ---- task functions of the prepared layout and its runs ------------------
+// Named classes, not lambdas, so Spark's closure cleaner skips them (see
+// graft.pregel.Tasks).
+
+/** (src, dst, w) → the edge keyed by its source, and the bare destination. */
+private[compute] final class RouteEdge
+    extends (((Long, Long, Double)) => Iterator[(Long, Option[(Long, Double)])]) with Serializable {
+  def apply(e: (Long, Long, Double)): Iterator[(Long, Option[(Long, Double)])] =
+    Iterator((e._1, Some((e._2, e._3))), (e._2, None))
+}
+
+private[compute] final class KeyedEdges
+    extends (Iterator[(Long, Option[(Long, Double)])] => Iterator[(Long, (Long, Double))])
+    with Serializable {
+  def apply(rows: Iterator[(Long, Option[(Long, Double)])]): Iterator[(Long, (Long, Double))] =
+    rows.collect { case (s, Some(e)) => (s, e) }
+}
+
+private[compute] final class DistinctIds
+    extends (Iterator[(Long, Option[(Long, Double)])] => Iterator[(Long, Unit)]) with Serializable {
+  def apply(rows: Iterator[(Long, Option[(Long, Double)])]): Iterator[(Long, Unit)] = {
+    val seen = mutable.HashSet.empty[Long]
+    rows.collect { case (id, _) if seen.add(id) => (id, ()) }
+  }
+}
+
+/** A partition's (edge, vertex) counts. */
+private[compute] final class Sizes
+    extends ((Iterator[(Long, (Long, Double))], Iterator[(Long, Unit)]) => Iterator[(Long, Long)])
+    with Serializable {
+  def apply(e: Iterator[(Long, (Long, Double))], v: Iterator[(Long, Unit)]): Iterator[(Long, Long)] =
+    Iterator.single((e.size.toLong, v.size.toLong))
+}
+
+/** Vertex ids → (id, the algorithm's initial value). */
+private[compute] final class InitialValues[V](algorithm: String)
+    extends (Iterator[(Long, Unit)] => Iterator[(Long, V)]) with Serializable {
+  def apply(ids: Iterator[(Long, Unit)]): Iterator[(Long, V)] =
+    ids.map { case (id, _) => (id, AlgorithmRegistry.initialVertexValue(algorithm, id).asInstanceOf[V]) }
 }

@@ -9,6 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.algos.compute.{AlgorithmRegistry, Cf}
+import graft.pregel.Tasks
 
 /**
  * Thin HTTP execution-lifecycle layer over the algorithm registry — the
@@ -19,7 +20,8 @@ import graft.algos.compute.{AlgorithmRegistry, Cf}
  *                                       (GraphAlgorithmHandler.java:119-208)
  *   POST   /prepare?name=G[&partitions=N]   build and cache the vertex set
  *                                       and per-source adjacency once
- *                                       ("prepare", :210-251)
+ *                                       ("prepare", :210-251); N ≥ 1,
+ *                                       default: the graph's current count
  *   POST   /pregel                      {"algorithm":"sssp","graph":"G",
  *                                        "configs":{...}} → {"id": appId}
  *                                       (configure, :253-393)
@@ -36,7 +38,11 @@ import graft.algos.compute.{AlgorithmRegistry, Cf}
  * distinct vertex ids with one partitioner and caches both
  * ([[AlgorithmRegistry.Prepared]]), so a run only shuffles its messages. A
  * graph that was imported but not prepared is laid out the same way, lazily,
- * by its first run. A finished run's vertex rows are collected once onto the
+ * by its first run. Import sizes the layout to the graph: one partition per
+ * 50,000 edges, at least 1 and at most the default parallelism
+ * (`Prepared.partitionsFor`), so a small graph runs each superstep as one
+ * task per stage; prepare keeps that count unless `partitions=N` sets
+ * another. A finished run's vertex rows are collected once onto the
  * driver and its cached Spark state released; result and predict render
  * from those rows, with no Spark job, until DELETE. The server turns on
  * TCP_NODELAY (the JDK's `sun.net.httpserver.nodelay`, unless already set):
@@ -117,7 +123,8 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
     Option(graphs.put(name, g)).foreach(_.release())
 
   /** text lines "src dst value" → staged edge list (the reference's import
-    * writes parsed records to the initial topic; we parse to an RDD). The
+    * writes parsed records to the initial topic; we parse to an RDD), laid
+    * out into `Prepared.partitionsFor` partitions of its edge count. The
     * cached layout is built by the first run unless /prepare builds it. */
   private def doImport(ex: HttpExchange): (Int, String, String) = {
     require(ex.getRequestMethod == "POST", "POST required")
@@ -129,22 +136,28 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
       (t(0).toLong, t(1).toLong, if (t.length > 2) t(2).toDouble else 1.0)
     }.toSeq
     val sc = spark.sparkContext
+    val parts = AlgorithmRegistry.Prepared.partitionsFor(edges.size, sc.defaultParallelism)
     install(name,
-      new AlgorithmRegistry.Prepared(sc.parallelize(edges), sc.defaultParallelism).persist())
-    (200, "application/json", MiniJson.obj("graph" -> name, "edges" -> edges.size))
+      new AlgorithmRegistry.Prepared(sc.parallelize(edges, parts), parts).persist())
+    (200, "application/json", MiniJson.obj("graph" -> name, "partitions" -> parts,
+      "edges" -> edges.size))
   }
 
   /** Build and cache the co-partitioned vertex set and adjacency now (the
     * reference's group-edges-by-source prepare job, GraphUtils.java:152-253
-    * — offset quiescence disappears). */
+    * — offset quiescence disappears), into `partitions` parts when given and
+    * the graph's current count otherwise. */
   private def doPrepare(ex: HttpExchange): (Int, String, String) = {
     require(ex.getRequestMethod == "POST", "POST required")
     val q = query(ex)
     val name = q.getOrElse("name", "default")
-    val parts = q.get("partitions").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
     val g = graphs.get(name)
     require(g != null, s"no imported graph '$name'")
+    val parts = q.get("partitions").map { v =>
+      val n = v.toIntOption.getOrElse(0)
+      require(n >= 1, s"partitions must be a positive integer, got '$v'")
+      n
+    }.getOrElse(g.parts)
     val prepared = new AlgorithmRegistry.Prepared(g.edges, parts)
     val (nEdges, nVertices) = prepared.materialize()
     install(name, prepared)
@@ -199,7 +212,7 @@ final class RestServer(spark: SparkSession, port: Int = 0) {
         val out = AlgorithmRegistry.runDetailed(spark, sub.algorithm,
           graphs.get(sub.graph), sub.configs, maxIter,
           onSuperstep = (step, ms) => { sub.runningTimeMs = ms; sub.superstep = step })
-        try sub.rows = out.vertices.collect() finally out.unpersistState()
+        try sub.rows = Tasks.collect(out.vertices) finally out.unpersistState()
         sub.aggregates = out.aggregates
         sub.runningTimeMs = out.runningTimeMs
         sub.superstep = out.superstep

@@ -51,6 +51,13 @@ import org.apache.spark.storage.StorageLevel
  * express. Built-in analytics with fixed schemas use the DataFrame-native loops
  * in graft.algos instead (Catalyst/Tungsten path).
  *
+ * Every function the loop passes to an RDD op is a named class (Tasks.scala)
+ * and its one action per superstep goes through `Tasks.collect`: Spark's
+ * closure cleaner re-reads and ASM-parses the declaring class's bytecode for
+ * every lambda it is handed (`Pregel$`, and `RDD`/`SparkContext` for the
+ * lambdas `collect` wraps), which cost the driver more per superstep than a
+ * small superstep's tasks do; a named class it skips at once.
+ *
  * It is implemented on RDDs rather than Dataset[T] deliberately: K/VV/EV/M
  * are arbitrary user types (the reference serializes them with Kryo too,
  * utils/KryoSerde.java:56), per-vertex compute is imperative, and the
@@ -337,13 +344,11 @@ object Pregel {
     // building the blocks shuffles nothing. The adjacency takes its vertex
     // ids from the initial state block, so the two start out aligned.
     var state: RDD[StateBlock[K, VV, EV, M]] = vertices.partitionBy(part)
-      .mapPartitions(it => Iterator.single(StateBlock.initial[K, VV, EV, M](it)),
-        preservesPartitioning = true)
+      .mapPartitions(new InitialState[K, VV, EV, M], preservesPartitioning = true)
       .persist(LoopStorage)
     var adj: RDD[AdjBlock[K, EV]] = state
-      .zipPartitions(edges.partitionBy(part), preservesPartitioning = true) { (s, e) =>
-        Iterator.single(AdjBlock.build(s.next().ids, e))
-      }.persist(LoopStorage)
+      .zipPartitions(edges.partitionBy(part), preservesPartitioning = true)(new BuildAdj[K, VV, EV, M])
+      .persist(LoopStorage)
     // an adjacency swapped in after a mutation superstep is built (and cut,
     // when due) by the next superstep's job; the one it replaces is released
     // after that job
@@ -366,22 +371,16 @@ object Pregel {
 
       val prev = state
       val next: RDD[StateBlock[K, VV, EV, M]] =
-        if (superstep == 0) prev.zipPartitions(adj, preservesPartitioning = true) { (s, a) =>
-          Iterator.single(step(s.next(), a.next(), Iterator.empty))
-        } else {
+        if (superstep == 0) prev.zipPartitions(adj, preservesPartitioning = true)(new FirstStep(step))
+        else {
           // THE shuffle of the superstep (replaces the reference's workSet
           // topic round-trip through Kafka brokers,
           // PregelComputation.java:797-801): each partition's outbox goes
           // out as one block per destination partition, tagged with its
           // source partition. `part` routes a destination partition index
           // (an Int in [0, n)) to itself.
-          val inbox = prev.mapPartitionsWithIndex { (src, it) =>
-            val blocks = it.next().outbox
-            blocks.indices.iterator.filter(blocks(_) != null).map(dst => (dst, (src, blocks(dst))))
-          }.partitionBy(part)
-          prev.zipPartitions(adj, inbox, preservesPartitioning = true) { (s, a, m) =>
-            Iterator.single(step(s.next(), a.next(), m))
-          }
+          val inbox = prev.mapPartitionsWithIndex(new Outgoing[K, VV, EV, M]).partitionBy(part)
+          prev.zipPartitions(adj, inbox, preservesPartitioning = true)(new NextStep(step))
         }
       next.persist(LoopStorage)
       val due = superstep > 0 && superstep % checkpointInterval == 0
@@ -394,9 +393,7 @@ object Pregel {
       // PregelComputation.java:860-905). The job ends in a zip of both, so
       // checkpointing reaches a swapped-in adjacency even when `next` is
       // itself marked for a cut in the same job. ------------------------------
-      val summaries = next.zipPartitions(adj)((s, _) => s)
-        .map(b => (b.aggs, b.mutated.nonEmpty, b.active))
-        .collect()
+      val summaries = Tasks.collect(next.zipPartitions(adj)(new Summary[K, VV, EV, M]))
       retired.foreach(_.unpersist(false))
       retired = Nil
       val active = summaries.map(_._3).sum
@@ -420,10 +417,8 @@ object Pregel {
 
       // ---- edge mutations: a narrow zip swaps the mutated rows in --------
       if (summaries.exists(_._2)) {
-        val swapped = adj.zipPartitions(next, preservesPartitioning = true) { (a, s) =>
-          val b = s.next()
-          Iterator.single(a.next().swapped(b.ids, b.mutated, b.newEdges))
-        }.persist(LoopStorage)
+        val swapped = adj.zipPartitions(next, preservesPartitioning = true)(new SwapRows[K, VV, EV, M])
+          .persist(LoopStorage)
         if (due) cut(swapped)
         retired = List(adj)
         adj = swapped
@@ -446,9 +441,8 @@ object Pregel {
     val finalAdj = adj
     val held = retired
     Result(
-      state.mapPartitions(_.flatMap(b => b.ids.indices.iterator.map(i => (b.ids(i), b.values(i)))),
-        preservesPartitioning = true),
-      adj.flatMap(_.edgeRows),
+      state.mapPartitions(new VertexRows[K, VV, EV, M], preservesPartitioning = true),
+      adj.flatMap(new EdgeRows[K, EV]),
       superstep, System.currentTimeMillis() - t0,
       master.current, finalState)(
       () => { finalBlocks.unpersist(false); finalAdj.unpersist(false); held.foreach(_.unpersist(false)) })

@@ -45,4 +45,55 @@ class RegistrySpec extends SparkSpec {
     assert(AlgorithmRegistry.initialVertexValue("bfs", 7L) === Long.MaxValue)
     assert(AlgorithmRegistry.algorithms.size === 8) // GraphAlgorithmType parity
   }
+
+  test("a sized layout has one partition per 50,000 edges, capped at the parallelism") {
+    import AlgorithmRegistry.Prepared.partitionsFor
+    assert(partitionsFor(0L, 4) === 1)
+    assert(partitionsFor(2620L, 4) === 1)
+    assert(partitionsFor(50000L, 4) === 1)
+    assert(partitionsFor(50001L, 4) === 2)
+    assert(partitionsFor(120000L, 4) === 3)
+    assert(partitionsFor(3763162L, 4) === 4)
+    assert(partitionsFor(3763162L, 32) === 32)
+    assert(partitionsFor(3763162L, 128) === 76)
+    intercept[IllegalArgumentException](new AlgorithmRegistry.Prepared(edges, 0))
+  }
+
+  test("the six REST algorithms give the same values on one partition as on four") {
+    val rnd = new scala.util.Random(11)
+    val pairs = (0 until 400).map { _ =>
+      ((rnd.nextInt(9) * rnd.nextInt(9)).toLong, rnd.nextInt(80).toLong)
+    }.filter { case (a, b) => a != b }.distinct
+    val weighted = pairs.flatMap { case (a, b) =>
+      val w = 1.0 + (a * 31 + b * 17) % 9
+      Seq((a, b, w), (b, a, w))
+    }
+    assert(AlgorithmRegistry.Prepared.partitionsFor(weighted.size, 4) === 1)
+    def values(parts: Int, algo: String, configs: Map[String, Any]): Map[Long, Any] = {
+      val g = new AlgorithmRegistry.Prepared(spark.sparkContext.parallelize(weighted, parts), parts)
+      g.materialize()
+      try {
+        val out = AlgorithmRegistry.runDetailed(spark, algo, g, configs, 6)
+        try out.vertices.collect().toMap finally out.unpersistState()
+      } finally g.release()
+    }
+    for ((algo, configs) <- Seq(
+        "bfs" -> Map[String, Any]("srcVertexId" -> 0L),
+        "sssp" -> Map[String, Any]("srcVertexId" -> 0L),
+        "wcc" -> Map.empty[String, Any],
+        "lp" -> Map.empty[String, Any],
+        "mssp" -> Map[String, Any]("landmarkVertexIds" -> Seq(0L, 8L, 49L)),
+        "pagerank" -> Map[String, Any]("tolerance" -> 0.0001, "resetProbability" -> 0.15))) {
+      val one = values(1, algo, configs)
+      val four = values(4, algo, configs)
+      assert(one.size > 60, algo)
+      assert(one.keySet === four.keySet, algo)
+      if (algo == "pagerank") one.foreach { case (v, r) =>
+        // inbox order follows the layout: ranks agree up to the last bits
+        val (a, b) = (r.asInstanceOf[(Double, Double)], four(v).asInstanceOf[(Double, Double)])
+        assert(math.abs(a._1 - b._1) <= 1e-9 * math.max(1.0, math.abs(b._1)), s"$v: $a $b")
+        assert(math.abs(a._2 - b._2) <= 1e-9 * math.max(1.0, math.abs(b._2)), s"$v: $a $b")
+      } else assert(one === four, algo)
+    }
+  }
 }

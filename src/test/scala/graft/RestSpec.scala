@@ -3,9 +3,15 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.api.RestServer
@@ -292,6 +298,90 @@ class RestSpec extends SparkSpec {
       val cfg = get(s"$base/pregel/$id/configs")
       assert(field(cfg, "iterations").toInt === 4)
       assert(field(cfg, "random.seed").toLong === 42L)
+    } finally srv.stop()
+  }
+
+  /** Records what Spark's closure cleaner logs at DEBUG — one "Cleaning …"
+    * line per closure it cleans — while `body` runs. */
+  private def cleanerLog(body: => Unit): Seq[String] = {
+    val name = "org.apache.spark.util.ClosureCleaner"
+    val lines = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("closure-cleaner-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val level = LogManager.getLogger(name).getLevel
+    Configurator.setLevel(name, Level.DEBUG)
+    val cfg = ctx.getConfiguration.getLoggerConfig(name)
+    cfg.setAdditive(false)
+    cfg.addAppender(capture, Level.DEBUG, null)
+    ctx.updateLoggers()
+    try body finally {
+      cfg.removeAppender(capture.getName)
+      cfg.setAdditive(true)
+      Configurator.setLevel(name, level)
+      capture.stop()
+    }
+    lines.asScala.toSeq.filter(_.contains("Cleaning"))
+  }
+
+  test("a prepared run and its result collect clean no closure") {
+    // the probe sees a lambda passed to an RDD op
+    assert(cleanerLog(spark.sparkContext.parallelize(Seq(1, 2), 1).map(_ + 1).count()).nonEmpty)
+    val srv = new RestServer(spark).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      post(s"$base/import?name=k&type=edges",
+        (0 until 30).flatMap(i => Seq(s"$i ${(i * 7 + 3) % 30} 1.0", s"${(i * 7 + 3) % 30} $i 1.0"))
+          .mkString("\n"))
+      post(s"$base/prepare?name=k&partitions=2")
+      for (algo <- Seq("bfs", "pagerank")) {
+        val configs = if (algo == "bfs") """{"srcVertexId":0}""" else "{}"
+        val id = field(post(s"$base/pregel",
+          s"""{"algorithm":"$algo","graph":"k","configs":$configs}"""), "id")
+        // the run thread collects the rows before it publishes COMPLETED
+        val cleaned = cleanerLog {
+          post(s"$base/pregel/$id", """{"numIterations":4}""")
+          awaitTerminal(base, id)
+        }
+        assert(cleaned === Nil, algo)
+        assert(resultRows(get(s"$base/pregel/$id/result")).size === 30, algo)
+      }
+    } finally srv.stop()
+  }
+
+  private def status(url: String): (Int, String) = {
+    val r = client.send(HttpRequest.newBuilder(URI.create(url))
+      .POST(HttpRequest.BodyPublishers.noBody()).build(), HttpResponse.BodyHandlers.ofString())
+    (r.statusCode, r.body)
+  }
+
+  test("prepare rejects a partition count below 1 and keeps the graph") {
+    val srv = new RestServer(spark).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      post(s"$base/import?name=z&type=edges", "0 1 1.0\n1 2 1.0\n2 3 1.0\n3 0 1.0")
+      for (bad <- Seq("0", "-2", "x")) {
+        val (code, body) = status(s"$base/prepare?name=z&partitions=$bad")
+        assert(code === 400, body)
+        assert(body.contains("partitions"), body)
+      }
+      val (_, sse) = runJob(base, "wcc", "z", 30)
+      assert(resultRows(sse) === (0 to 3).map(_.toLong -> "0").toMap)
+    } finally srv.stop()
+  }
+
+  test("a small graph imports and prepares as one partition; ?partitions=N wins") {
+    val srv = new RestServer(spark).start()
+    try {
+      val base = s"http://127.0.0.1:${srv.boundPort}"
+      assert(field(post(s"$base/import?name=s&type=edges", chain(10)), "partitions") === "1")
+      assert(field(post(s"$base/prepare?name=s"), "partitions") === "1")
+      assert(field(post(s"$base/prepare?name=s&partitions=3"), "partitions") === "3")
+      val (_, sse) = runJob(base, "wcc", "s", 30)
+      assert(resultRows(sse) === (0 to 10).map(_.toLong -> "0").toMap)
     } finally srv.stop()
   }
 }

@@ -2,27 +2,32 @@ package graft.algos
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.KGraph
+import graft.pregel.Pregel
 
 /**
- * DataFrame-native implementations of the reference's Pregel algorithm library
- * (kafka-graphs-core/src/main/java/io/kgraph/library) — the performance
- * path. Each algorithm is a driver loop over declarative DataFrame transforms:
- * Catalyst plans every superstep (pushdown, AQE, broadcast when a side is
- * small) and Tungsten codegens the per-row work; messages are pre-aggregated
- * map-side in the same shuffle (min/sum combiners — the reference ships whole
- * message lists with no combiner, PregelComputation.java:751-753).
+ * Implementations of the reference's Pregel algorithm library
+ * (kafka-graphs-core/src/main/java/io/kgraph/library) and of the
+ * intersection family, over DataFrame inputs and outputs.
  *
- * Scale design shared by all loops:
- *  - ONE shuffle per superstep (message groupBy on destination); the
- *    state-update join reuses the aggregation's hash partitioning.
- *  - `localCheckpoint` per iteration cuts lineage (no stack-overflow plans at
- *    superstep 50+) and the convergence `count()` reuses that materialization.
- *  - frontier-based variants (BFS/SSSP/WCC) only send from vertices that
- *    improved last round, so late supersteps touch a tiny fraction of a
- *    100 TB graph rather than every vertex.
+ * Two loop shapes:
+ *  - wcc, kCore, pageRank and HyperBall run on the block superstep runtime
+ *    (graft.pregel.Pregel, vertex programs in BlockLoops.scala): the
+ *    adjacency is laid out once as cached CSR blocks, and a round is ONE
+ *    Spark job of two stages — the message shuffle, then the zip of state,
+ *    adjacency and inbox blocks — with messages combined map-side (min,
+ *    sum, register max) and no per-round query planning, codegen or closure
+ *    cleaning. Lineage is cut by Pregel's policy: a reliable checkpoint
+ *    when `sc.getCheckpointDir` is set, localCheckpoint otherwise.
+ *  - bfs, sssp, mssp and labelPropagation are driver loops over
+ *    declarative DataFrame transforms (`frontierLoop`): Catalyst plans
+ *    every round (AQE, broadcast when a side is small), with ONE message
+ *    shuffle per round pre-aggregated map-side, a `localCheckpoint` per
+ *    round, and frontier variants that only send from vertices that
+ *    improved last round.
  */
 object GraphAlgorithms {
 
@@ -149,26 +154,20 @@ object GraphAlgorithms {
 
   // =========================================================================
   // Connected components (reference library/ConnectedComponents.java:28-62 —
-  // min-label propagation). Undirected propagation of the minimum vertex id.
-  // Returns (id, component).
+  // min-label propagation). Undirected propagation of the minimum vertex id,
+  // sending only from vertices whose label changed ([[MinLabel]]); at most
+  // `maxIterations` message rounds. Returns (id, component).
   // =========================================================================
   def wcc(g: KGraph, maxIterations: Int = 100): DataFrame = {
-    val edges = cpKeyed(bidir(g.edges, withValue = false), "src")
-    // state carries a `changed` flag so each superstep is ONE materialization
-    // (localCheckpoint) + ONE count that reuses it — no separate frontier DF.
-    val init = g.vertices.select(col("id"), col("id").as("comp"), lit(true).as("changed"))
-    val state = frontierLoop(init, maxIterations, col("changed")) { state =>
-      val msgs = edges
-        .join(state.filter(col("changed")).select(col("id").as("src"), col("comp")), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("comp")).as("cand"))
-      state.select(col("id"), col("comp"))
-        .join(msgs, Seq("id"), "left_outer")
-        .select(col("id"),
-          when(col("cand") < col("comp"), col("cand")).otherwise(col("comp")).as("comp"),
-          (col("cand") < col("comp")).as("changed"))
-    }
-    state.select(col("id"), col("comp").as("value"))
+    val spark = g.vertices.sparkSession
+    val res = Pregel.run(spark, new MinLabel,
+      BlockLoops.vertexIds(g.vertices).mapPartitions(new OwnLabels),
+      BlockLoops.counted(BlockLoops.keyed(g.edges, BlockLoops.partitioner(spark),
+        forward = true, backward = true, loops = true)),
+      maxIterations = BlockLoops.supersteps(maxIterations))
+    val idType = g.vertices.schema("id").dataType
+    BlockLoops.frame(spark, res, new LongValueRows(positive = false), BlockLoops.schema(LongType), idType)
+      .select(col("id"), col("value").cast(idType).as("value"))
   }
 
   /**
@@ -327,42 +326,28 @@ object GraphAlgorithms {
 
   // =========================================================================
   // PageRank — the reference's delta/tolerance formulation
-  // (library/PageRank.java:32-113, GraphX-style): out-edge weight = 1/outDeg,
-  // initial message resetProb/(1-resetProb) to every vertex,
+  // (library/PageRank.java:32-113, GraphX-style): out-edge weight = 1/outDeg
+  // per edge row (repeated rows ride one edge of weight count/outDeg),
   //   rank += (1-resetProb) * Σ msgs;  delta = (1-resetProb) * Σ msgs
-  // send delta * weight while delta > tolerance. Personalized variant seeds
-  // only srcVertexId. Returns (id, value=rank).
+  // send delta * weight while delta > tolerance, for at most `maxIterations`
+  // message rounds ([[DeltaRank]]). Personalized variant seeds only
+  // srcVertexId. Returns (id, value=rank).
   // =========================================================================
   def pageRank(g: KGraph, tolerance: Double = 0.0001, resetProb: Double = 0.15,
                srcVertexId: Option[Long] = None, maxIterations: Int = 100): DataFrame = {
-    val outDeg = g.edges.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    val edges = cpKeyed(g.edges.select(col("src"), col("dst"))
-      .join(outDeg, Seq("src"))
-      .select(col("src"), col("dst"), (lit(1.0) / col("odeg")).as("w")), "src")
-
-    val damp = 1.0 - resetProb
+    val spark = g.vertices.sparkSession
     // Standard: every vertex starts at rank = delta = resetProb (superstep 0
     // re-sends the initial message resetProb/(1-resetProb) to self,
     // PageRank.java:66-85). Personalized: ONLY the source is seeded, at rank
     // 1.0 — the reference's oldDelta == -Infinity branch (PageRank.java:90-92,
     // initial message 0.0 in PageRankTest.java:198-266).
-    val seed0: Column = srcVertexId match {
-      case Some(s) => when(col("id") === s, lit(1.0)).otherwise(lit(0.0))
-      case None    => lit(resetProb)
-    }
-    val init = g.vertices.select(col("id"), seed0.as("rank"), seed0.as("delta"))
-    val state = frontierLoop(init, maxIterations, col("delta") > tolerance) { state =>
-      val frontier = state.filter(col("delta") > tolerance)
-      val msgs = frontier.withColumnRenamed("id", "src")
-        .join(edges, Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("delta") * col("w")).as("msg"))
-      state.join(msgs, Seq("id"), "left_outer")
-        .select(col("id"),
-          (col("rank") + coalesce(col("msg"), lit(0.0)) * damp).as("rank"),
-          (coalesce(col("msg"), lit(0.0)) * damp).as("delta"))
-    }
-    state.select(col("id"), col("rank").as("value"))
+    val res = Pregel.run(spark, new DeltaRank(tolerance, resetProb),
+      BlockLoops.vertexIds(g.vertices).mapPartitions(new RankSeeds(resetProb, srcVertexId)),
+      BlockLoops.weighted(BlockLoops.keyed(g.edges, BlockLoops.partitioner(spark),
+        forward = true, backward = false, loops = true)),
+      maxIterations = BlockLoops.supersteps(maxIterations))
+    BlockLoops.frame(spark, res, new DoubleValueRows, BlockLoops.schema(DoubleType),
+      g.vertices.schema("id").dataType)
   }
 
   // =========================================================================
@@ -1250,59 +1235,32 @@ object GraphAlgorithms {
   /** k-core: the maximal subgraph where every vertex keeps degree ≥ k —
     * the standard graph-density peel (community cores, nucleus
     * decomposition, spam/bot filtering). Peeling is DEGREE-DECREMENTAL
-    * (Matula–Beck, adapted to bulk rounds): maintain per-vertex degrees,
-    * and per round subtract from each survivor only the edges it lost to
-    * this round's removed vertices — the edge (u, v) with u dying and v
-    * alive is found by joining the (immutable, materialized-once)
-    * bidirectional edge list against the removed set. Every edge is
-    * charged at most twice over the WHOLE peel (once per endpoint death),
-    * so total work is O(E + V·rounds) instead of the O(E·rounds) of the
-    * naive recompute-degrees-per-round formulation — the difference
-    * between a cheap and an impossible deep cascade at 100 TB. Convergence
-    * (no vertex below k) is read off the maintained degree column with no
-    * final sweep. Per-round frames cut lineage with `localCheckpoint` +
-    * the stats barrier like every iterative loop here. Self-loops count 2
-    * toward their vertex's degree and duplicate edges count each time
-    * (multigraph semantics, matching the degree aggregate this replaces).
+    * (Matula–Beck, adapted to bulk rounds, [[DegreePeel]]): every vertex
+    * keeps its degree, and each round every vertex below k dies and sends
+    * each neighbour its edge multiplicity as a decrement, so every edge is
+    * charged at most twice over the WHOLE peel (once per endpoint death):
+    * O(E + V·rounds) work instead of recomputing degrees per round.
+    * Convergence (no vertex below k) needs no final sweep. Self-loops
+    * count 2 toward their vertex's degree and duplicate edges count each
+    * time (multigraph semantics); the vertices are the edge endpoints.
     * Returns the core's (id, degree). Logs a warning if `maxIter`
-    * exhausts before the fixpoint — the result may then still contain
-    * sub-k vertices. */
+    * rounds exhaust before the fixpoint — the result may then still contain
+    * sub-k vertices, with the degrees as maintained at the cap. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 1, "k must be positive")
-    val bd = cp(bidir(edges.select(col("src"), col("dst")), withValue = false))
-    var d = barrier(cp(bd.select(col("src").as("id"))
-      .groupBy(col("id")).agg(count(lit(1)).as("d"))))
-    var iter = 0
-    var result: DataFrame = null
-    while (result == null && iter < maxIter) {
-      val removed = d.filter(col("d") < k)
-      val nR = removed.count()
-      if (nR == 0L) result = d
-      else {
-        val alive = d.filter(col("d") >= k)
-        val remIds = removed.select(col("id").as("src"))
-        // the removed set is usually a sliver; broadcast it unless huge
-        val remSide =
-          if (nR <= 4000000L) broadcast(remIds) else remIds.hint("shuffle_hash")
-        val dec = bd.join(remSide, Seq("src"))
-          .select(col("dst").as("id"))
-          .groupBy(col("id")).agg(count(lit(1)).as("dec"))
-        d = barrier(cp(alive.join(dec, Seq("id"), "left_outer")
-          .select(col("id"),
-            (col("d") - coalesce(col("dec"), lit(0L))).as("d"))))
-      }
-      iter += 1
-    }
-    if (result == null) {
+    val spark = edges.sparkSession
+    val keyed = BlockLoops.keyed(edges, BlockLoops.partitioner(spark),
+      forward = true, backward = true, loops = true)
+    val res = Pregel.run(spark, new DegreePeel(k),
+      keyed.mapPartitions(new Sources, preservesPartitioning = true), BlockLoops.counted(keyed),
+      maxIterations = BlockLoops.supersteps(maxIter))
+    if (res.state == "MAX_ITERATIONS")
       logger.warn(s"kCore(k=$k) exhausted maxIter=$maxIter before convergence; " +
         "the returned vertex set may still contain sub-k vertices")
-      result = d
-    }
-    // deg-0 exclusion only matters on the exhaustion path: a vertex whose
-    // whole neighborhood died has no edges left and the old edge-based
-    // aggregate would not have listed it
-    result.filter(col("d") > 0)
-      .select(col("id"), col("d").cast("long").as("degree"))
+    // degree 0 only on the exhaustion path: a vertex whose whole
+    // neighborhood died has no edges left
+    BlockLoops.frame(spark, res, new LongValueRows(positive = true), BlockLoops.schema(LongType),
+      BlockLoops.widerIdType(edges)).withColumnRenamed("value", "degree")
   }
 
   // =========================================================================
@@ -1322,65 +1280,48 @@ object GraphAlgorithms {
   // independent engine reproduces from the edge list — the d_hll_orders
   // oracle discipline applied to an iterated graph computation.
   //
-  // Scale shape: state is (id, bucket ≤ 2^p, r) — O(V · min(ball, 2^p))
-  // rows; each round is ONE join (edges × state on the successor id) + ONE
-  // combinable max-aggregate shuffle, with localCheckpoint + StatsBarrier
-  // per round (the wcc/kcore loop conventions). The convergence probe rides
-  // a count+sum aggregate over the just-checkpointed state. At p = 6 a
-  // billion-vertex graph carries ≤ 64 rows per vertex — the memory bound
-  // that makes HyperBall feasible where exact BFS-from-every-vertex is not.
+  // Scale shape: one long-packed counter (2^p register bytes) per vertex in
+  // the block runtime's state; each round only counters that grew travel,
+  // against edge direction, combined per target by bytewise max before the
+  // shuffle ([[RegisterMax]]). At p = 6 a billion-vertex graph carries 64
+  // bytes per vertex — the memory bound that makes HyperBall feasible where
+  // exact BFS-from-every-vertex is not.
   // =========================================================================
 
-  /** Shared loop: returns the converged registers and the per-round
-    * (t, n_regs, Σr, Σ estimate) trajectory — t = 0 plus every round that
-    * changed ≥ 1 register. Registers only grow (cells added or ranks
-    * raised), so the global (count, Σr) pair is strictly increasing until
-    * the fixpoint; its first repeat IS convergence, and the emitted rounds
-    * are exactly the strictly-increasing prefix an oracle can reproduce
-    * with a LAG filter. */
+  /** Shared loop: returns the converged registers (id, r0..r{L-1}) and
+    * the per-round (t, n_regs, Σr, Σ estimate) trajectory — t = 0 plus
+    * every round that changed ≥ 1 register. Registers only grow (cells
+    * added or ranks raised), so the global (count, Σr) pair is strictly
+    * increasing until the fixpoint; its first repeat IS convergence, and
+    * the emitted rounds are exactly the strictly-increasing prefix an
+    * oracle can reproduce with a LAG filter. Runs on the block superstep
+    * runtime ([[RegisterMax]]): counters flow against edge direction, and
+    * an edge source that is not a vertex gathers its successors'
+    * registers like any vertex. */
   private def hyperBallLoop(g: KGraph, p: Int, maxIterations: Int,
                             withEstimates: Boolean = false)
       : (DataFrame, Seq[(Int, Long, Long, Double)]) = {
     import graft.pipeline.Sketches
+    val spark = g.vertices.sparkSession
+    val part = BlockLoops.partitioner(spark)
     val regCols = Sketches.hllLongCols(p)
-    // partitioned+sorted by the join key ONCE (see cpKeyed): every
-    // round's edges⋈state join re-shuffles and re-sorts only the state
-    // side instead of all E edge rows per round
-    val edges = cpKeyed(g.edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct(), "dst")
-    var state = barrier(cp(Sketches.hllPackedSingletonsLongs(
-      g.vertices.select(col("id"), col("id").cast("string").as("k")),
-      "id", "k", p)))
-    // the Σ-estimate column only serves neighborhoodFunction /
-    // effectiveDiameter — register/trajectory callers skip it; all three
-    // statistics come from ONE rowwise pass over the packed registers
-    def stats(df: DataFrame): (Long, Long, Double) = {
-      val regs = array(regCols.map(col): _*)
-      val estCol = if (withEstimates) Sketches.hllEstimateLongs(p)(regs)
-                   else lit(0.0)
-      val r = df.select(Sketches.hllLongStats(regs).as("_st"),
-          estCol.as("_e"))
-        .agg(coalesce(sum(col("_st._1").cast("long")), lit(0L)),
-          coalesce(sum(col("_st._2")), lit(0L)),
-          coalesce(sum(col("_e")), lit(0.0)))
-        .head()
-      (r.getLong(0), r.getLong(1), r.getDouble(2))
-    }
-    var cur = stats(state)
-    val traj = scala.collection.mutable.ArrayBuffer((0, cur._1, cur._2, cur._3))
-    var iter = 0
-    var done = cur._1 == 0L // edgeless/empty graph: nothing to propagate
-    while (!done && iter < maxIterations) {
-      val next = barrier(cp(hbStep(edges, state, regCols)))
-      val ns = stats(next)
-      iter += 1
-      done = (ns._1, ns._2) == ((cur._1, cur._2))
-      if (!done) traj += ((iter, ns._1, ns._2, ns._3))
-      state.unpersist(false)
-      state = next
-      cur = ns
-    }
-    (state, traj.toSeq)
+    val counters = org.apache.spark.sql.graft.InternalDF.internalRdd(
+      Sketches.hllPackedSingletonsLongs(
+          g.vertices.select(col("id"), col("id").cast("string").as("k")), "id", "k", p)
+        .select(col("id").cast(LongType) +: regCols.map(col): _*))
+      .mapPartitions(new PackedCounters(regCols.size))
+    val sources = BlockLoops.keyed(g.edges, part, forward = true, backward = false, loops = false)
+      .mapPartitions(new EdgeSources, preservesPartitioning = true)
+    val vertices = counters.partitionBy(part).union(sources)
+      .mapPartitions(new FirstCounters(regCols.size), preservesPartitioning = true)
+    val cf = new RegisterMax(p, withEstimates)
+    val res = Pregel.run(spark, cf, vertices, BlockLoops.counted(
+        BlockLoops.keyed(g.edges, part, forward = false, backward = true, loops = false)),
+      maxIterations = BlockLoops.supersteps(maxIterations))
+    val schema = StructType(StructField("id", LongType, nullable = false) +:
+      regCols.map(StructField(_, LongType, nullable = false)))
+    (BlockLoops.frame(spark, res, new CounterRows, schema, g.vertices.schema("id").dataType),
+      cf.trajectory.toSeq)
   }
 
   /** One HyperBall round over PACKED counters: each vertex pointwise-max-

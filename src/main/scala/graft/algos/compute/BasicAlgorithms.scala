@@ -8,8 +8,8 @@ import graft.pregel.Pregel.{Callback, MasterCallback, OutEdge}
  * line-by-line translations of the ComputeFunctions (pure logic; the Kafka
  * machinery is replaced by graft.pregel.Pregel).
  *
- * These run on the generic Pregel runtime for API parity; the DataFrame-native
- * fast paths for the same algorithms live in graft.algos.GraphAlgorithms.
+ * These run on the generic Pregel runtime for REST and API parity; the
+ * batch API for the same algorithms is graft.algos.GraphAlgorithms.
  */
 object BasicAlgorithms {
 
@@ -56,8 +56,7 @@ object BasicAlgorithms {
     * edge direction plus the label-repair channel — on a one-directional
     * tree (every vertex pointing at a smaller parent) each vertex stops at
     * its parent's id. Feed an undirected()-doubled edge set for true
-    * components (the DataFrame fast path GraphAlgorithms.wcc does this
-    * internally). */
+    * components (GraphAlgorithms.wcc does this internally). */
   class Wcc extends ComputeFunction[Long, Long, Double, Long] {
     def compute(superstep: Int, id: Long, value: Long, messages: Iterable[Long],
                 edges: Iterable[OutEdge[Long, Double]],

@@ -5,8 +5,10 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Task-metric totals over a set of finished tasks. Peak execution memory is
   * the max over the tasks, every other figure a sum. */
@@ -31,8 +33,10 @@ final case class TaskTotals(
       s""""spill_disk_bytes":$diskSpillBytes,"peak_exec_memory_bytes":$peakExecMemBytes"""
 }
 
-/** One completed stage of a measured entry; `callsite` is the stage name
-  * Spark derives from the user code that launched it. */
+/** One completed stage of a measured entry; `callsite` is the description
+  * of the SQL execution the stage ran for (the Dataset action's call site),
+  * or, outside SQL, the stage name Spark derives from the user code that
+  * launched it. */
 final case class StageMetrics(entry: String, id: Int, attempt: Int, callsite: String,
                               wallS: Double, totals: TaskTotals) {
   def json: String =
@@ -68,8 +72,23 @@ final class QueryMetrics private (sc: SparkContext, keepStages: Boolean) extends
   private val stageTotals = mutable.HashMap.empty[(Int, Int), TaskTotals]
   private val stages = mutable.ArrayBuffer.empty[StageMetrics]
   private var entry = ""
+  // SQL execution id → its description, and stage id → the execution it
+  // ran for: AQE submits query stages from its own thread pool, so their
+  // stage names point at that pool, not at the action that started them
+  private val executions = mutable.HashMap.empty[Long, String]
+  private val stageExecution = mutable.HashMap.empty[Int, Long]
 
-  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    jobs += 1
+    if (keepStages) Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .foreach(id => e.stageIds.foreach(stageExecution(_) = id.toLong))
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart if keepStages =>
+      synchronized { executions(s.executionId) = s.description }
+    case _ =>
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
@@ -87,7 +106,8 @@ final class QueryMetrics private (sc: SparkContext, keepStages: Boolean) extends
     if (keepStages) {
       val si = e.stageInfo
       val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
-      stages += StageMetrics(entry, si.stageId, si.attemptNumber(), si.name, wall,
+      val callsite = stageExecution.remove(si.stageId).flatMap(executions.get).getOrElse(si.name)
+      stages += StageMetrics(entry, si.stageId, si.attemptNumber(), callsite, wall,
         stageTotals.remove((si.stageId, si.attemptNumber())).getOrElse(TaskTotals()))
     }
   }
@@ -98,7 +118,7 @@ final class QueryMetrics private (sc: SparkContext, keepStages: Boolean) extends
     org.apache.spark.graft.BusFlush.waitUntilEmpty(sc)
     synchronized {
       jobs = 0L; stageCount = 0L; totals = TaskTotals()
-      stageTotals.clear(); stages.clear(); entry = name
+      stageTotals.clear(); stages.clear(); executions.clear(); stageExecution.clear(); entry = name
     }
     val t0 = System.nanoTime()
     val (rows, error) =

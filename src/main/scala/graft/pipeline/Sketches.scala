@@ -767,43 +767,49 @@ object Sketches {
   /** (non-zero register count, rank sum) over the long-packed columns —
     * [[hllByteStats]]' statistic and fold order (byte index ascending). */
   def hllLongStats: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((a: Seq[Long]) => {
-      var n = 0; var s = 0L; var i = 0
-      while (i < a.length) {
-        val v = a(i); var j = 0
-        while (j < 8) {
-          val r = ((v >>> (8 * j)) & 0xFFL).toInt
-          if (r > 0) { n += 1; s += r }
-          j += 1
-        }
-        i += 1
+    udf((a: Seq[Long]) => longRegStats(a.toArray))
+
+  /** [[hllLongStats]] of one long-packed counter. */
+  private[graft] def longRegStats(a: Array[Long]): (Int, Long) = {
+    var n = 0; var s = 0L; var i = 0
+    while (i < a.length) {
+      val v = a(i); var j = 0
+      while (j < 8) {
+        val r = ((v >>> (8 * j)) & 0xFFL).toInt
+        if (r > 0) { n += 1; s += r }
+        j += 1
       }
-      (n, s)
-    })
+      i += 1
+    }
+    (n, s)
+  }
 
   /** [[hllEstimateBytes]] off the long-packed columns — identical fold
     * order (byte index ascending), branch, and math library (StrictMath)
     * so the layouts agree to the last bit. */
   def hllEstimateLongs(p: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
     require(p >= 4 && p <= 18, s"p must be in [4, 18], got $p")
+    udf((a: Seq[Long]) => longRegEstimate(a.toArray, p))
+  }
+
+  /** [[hllEstimateLongs]] of one long-packed counter at precision `p`. */
+  private[graft] def longRegEstimate(a: Array[Long], p: Int): Double = {
     val m = 1 << p
     val alpha = alphaFor(m)
-    udf((a: Seq[Long]) => {
-      var acc = 0.0; var zeros = 0; var i = 0
-      while (i < a.length) {
-        val v = a(i); var j = 0
-        while (j < 8) {
-          val r = ((v >>> (8 * j)) & 0xFFL).toInt
-          acc += StrictMath.pow(2.0, -r.toDouble)
-          if (r == 0) zeros += 1
-          j += 1
-        }
-        i += 1
+    var acc = 0.0; var zeros = 0; var i = 0
+    while (i < a.length) {
+      val v = a(i); var j = 0
+      while (j < 8) {
+        val r = ((v >>> (8 * j)) & 0xFFL).toInt
+        acc += StrictMath.pow(2.0, -r.toDouble)
+        if (r == 0) zeros += 1
+        j += 1
       }
-      val e = alpha * m * m / acc
-      if (e <= 2.5 * m && zeros > 0) m * StrictMath.log(m.toDouble / zeros)
-      else e
-    })
+      i += 1
+    }
+    val e = alpha * m * m / acc
+    if (e <= 2.5 * m && zeros > 0) m * StrictMath.log(m.toDouble / zeros)
+    else e
   }
 
   private def alphaFor(m: Int): Double = m match {

@@ -164,26 +164,46 @@ private[pregel] final class MsgBlock[K, M](val targets: Array[K], val msgs: Arra
     extends Serializable
 
 /** A task's outgoing messages, bucketed by destination partition as they
-  * are sent. */
-private[pregel] final class Outbox[K: ClassTag, M: ClassTag](part: Partitioner) {
+  * are sent. With a combiner, messages to one target fold into the slot of
+  * the first one sent to it, in send order, so each bucket holds at most
+  * one message per target; `sent` still counts every send. */
+private[pregel] final class Outbox[K: ClassTag, M: ClassTag](
+    part: Partitioner, combiner: Combining[M] = null) {
   private val targets = new Array[mutable.ArrayBuilder[K]](part.numPartitions)
   private val msgs = new Array[mutable.ArrayBuilder[M]](part.numPartitions)
+  // with a combiner: per bucket, target → slot, and the folded messages
+  private val slots = if (combiner == null) null else new Array[IdIndex[K]](part.numPartitions)
+  private val folded = if (combiner == null) null else new Array[mutable.ArrayBuffer[M]](part.numPartitions)
   var sent = 0L
 
   def add(target: K, message: M): Unit = {
     val p = part.getPartition(target)
+    if (combiner == null) {
+      if (targets(p) == null) {
+        targets(p) = mutable.ArrayBuilder.make[K]
+        msgs(p) = mutable.ArrayBuilder.make[M]
+      }
+      targets(p) += target
+      msgs(p) += message
+    } else fold(p, target, message)
+    sent += 1
+  }
+
+  private def fold(p: Int, target: K, message: M): Unit = {
     if (targets(p) == null) {
       targets(p) = mutable.ArrayBuilder.make[K]
-      msgs(p) = mutable.ArrayBuilder.make[M]
+      slots(p) = new IdIndex[K]
+      folded(p) = mutable.ArrayBuffer.empty[M]
     }
-    targets(p) += target
-    msgs(p) += message
-    sent += 1
+    val at = slots(p).putIfAbsent(target, folded(p).length)
+    if (at < 0) { targets(p) += target; folded(p) += message }
+    else folded(p)(at) = combiner.combine(folded(p)(at), message)
   }
 
   /** One block per destination partition; null where nothing was sent. */
   def blocks(): Array[MsgBlock[K, M]] = Array.tabulate(targets.length) { p =>
-    if (targets(p) == null) null else new MsgBlock(targets(p).result(), msgs(p).result())
+    if (targets(p) == null) null
+    else new MsgBlock(targets(p).result(), if (combiner == null) msgs(p).result() else folded(p).toArray)
   }
 }
 

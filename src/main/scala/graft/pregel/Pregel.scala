@@ -27,7 +27,8 @@ import org.apache.spark.storage.StorageLevel
  *    partition, mutated out-edges, and the partition's aggregator merge.
  *
  *   per superstep: the previous state's outboxes → ONE shuffle of at most
- *   n × n message blocks keyed by destination partition → zipPartitions
+ *   n × n message blocks keyed by destination partition (one message per
+ *   target and source partition with a combiner) → zipPartitions
  *   (state, adjacency, inbox blocks) → compute per vertex → next state
  *   block; one collect of per-partition aggregates and termination counts.
  *
@@ -48,8 +49,11 @@ import org.apache.spark.storage.StorageLevel
  * This layer keeps the reference's exact user contract — ComputeFunction with
  * voteToHalt, registered (persistent) aggregators, masterCompute, and in-flight
  * edge mutation (ComputeFunction.java:183-268) — which GraphX's Pregel cannot
- * express. Built-in analytics with fixed schemas use the DataFrame-native loops
- * in graft.algos instead (Catalyst/Tungsten path).
+ * express. A function that mixes in [[Combining]] has its messages folded
+ * per target before the shuffle. The REST registry runs the library ports
+ * of graft.algos.compute on it, and GraphAlgorithms runs wcc, kCore,
+ * pageRank and HyperBall on it (graft.algos.BlockLoops); bfs, sssp, mssp
+ * and label propagation there are still DataFrame loops.
  *
  * Every function the loop passes to an RDD op is a named class (Tasks.scala)
  * and its one action per superstep goes through `Tasks.collect`: Spark's
@@ -89,12 +93,16 @@ object Pregel {
       runningTimeMs: Long,
       aggregates: Map[String, Any],
       state: String)(
-      private val release: () => Unit) {
+      private val release: () => Unit,
+      private val releaseEdges: () => Unit = () => ()) {
     /** Unpersist the runtime's cached state (final state + adjacency blocks).
       * Call after materializing everything derived from vertices/edges —
       * long sessions running many algorithms otherwise accumulate cached
       * blocks until LRU pressure. */
     def unpersistState(): Unit = release()
+    /** Unpersist only the adjacency blocks, for a caller that keeps reading
+      * `vertices` (the final state blocks stay cached) but not `edges`. */
+    def unpersistEdges(): Unit = releaseEdges()
   }
 
   /** Executor-side aggregator handle for the pre/postSuperstep hooks:
@@ -210,6 +218,12 @@ object Pregel {
       merges: Map[String, (Any, Any) => Any],
       part: Partitioner) extends Serializable {
 
+    /** The function's message combiner, when it has one (see [[Combining]]). */
+    private val combiner: Combining[M] = fn match {
+      case c: Combining[M @unchecked] => c
+      case _ => null
+    }
+
     private def fold(acc: mutable.HashMap[String, Any], name: String, v: Any): Unit =
       acc(name) = acc.get(name).map(merges(name)(_, v)).getOrElse(v)
 
@@ -257,7 +271,7 @@ object Pregel {
       val inboxes = scala.collection.immutable.ArraySeq.unsafeWrapArray(msgs).view
       val values = s.values.clone()
       val halted = s.halted.clone().asInstanceOf[java.util.BitSet]
-      val out = new Outbox[K, M](part)
+      val out = new Outbox[K, M](part, combiner)
       val mutated = mutable.ArrayBuilder.make[Int]
       val newEdges = mutable.ArrayBuffer.empty[Adj[K, EV]]
       val aggs = mutable.HashMap.empty[String, Any]
@@ -440,12 +454,13 @@ object Pregel {
     val finalBlocks = state
     val finalAdj = adj
     val held = retired
+    val releaseAdj = () => { finalAdj.unpersist(false); held.foreach(_.unpersist(false)) }
     Result(
       state.mapPartitions(new VertexRows[K, VV, EV, M], preservesPartitioning = true),
       adj.flatMap(new EdgeRows[K, EV]),
       superstep, System.currentTimeMillis() - t0,
       master.current, finalState)(
-      () => { finalBlocks.unpersist(false); finalAdj.unpersist(false); held.foreach(_.unpersist(false)) })
+      () => { finalBlocks.unpersist(false); releaseAdj() }, releaseAdj)
   }
 }
 
@@ -481,4 +496,17 @@ trait ComputeFunction[K, VV, EV, M] extends Serializable {
       messages: Iterable[M],
       edges: Iterable[Pregel.OutEdge[K, EV]],
       cb: Pregel.Callback[K, VV, EV, M]): Unit
+}
+
+/**
+ * A message combiner a [[ComputeFunction]] may mix in when its compute()
+ * only folds its inbox with an associative `combine` (a min, a sum, a
+ * register max). A task then ships at most one message per (destination
+ * partition, target): messages to one target fold into the first one sent
+ * to it, in send order, and the receiver sees one per source partition, in
+ * source-partition order, so floating-point folds stay reproducible. A
+ * function without it gets every message, as sent.
+ */
+trait Combining[M] {
+  def combine(a: M, b: M): M
 }

@@ -3,15 +3,9 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.api.RestServer
@@ -301,31 +295,7 @@ class RestSpec extends SparkSpec {
     } finally srv.stop()
   }
 
-  /** Records what Spark's closure cleaner logs at DEBUG — one "Cleaning …"
-    * line per closure it cleans — while `body` runs. */
-  private def cleanerLog(body: => Unit): Seq[String] = {
-    val name = "org.apache.spark.util.ClosureCleaner"
-    val lines = new ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("closure-cleaner-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val level = LogManager.getLogger(name).getLevel
-    Configurator.setLevel(name, Level.DEBUG)
-    val cfg = ctx.getConfiguration.getLoggerConfig(name)
-    cfg.setAdditive(false)
-    cfg.addAppender(capture, Level.DEBUG, null)
-    ctx.updateLoggers()
-    try body finally {
-      cfg.removeAppender(capture.getName)
-      cfg.setAdditive(true)
-      Configurator.setLevel(name, level)
-      capture.stop()
-    }
-    lines.asScala.toSeq.filter(_.contains("Cleaning"))
-  }
+  private def cleanerLog(body: => Unit): Seq[String] = ClosureCleanerLog(body)
 
   test("a prepared run and its result collect clean no closure") {
     // the probe sees a lambda passed to an RDD op

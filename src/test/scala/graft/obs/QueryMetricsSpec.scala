@@ -62,4 +62,18 @@ class QueryMetricsSpec extends SparkSpec {
       assert(m.stages.forall(s => s.entry == "staged" && s.callsite.nonEmpty))
     } finally qm.detach()
   }
+
+  test("under AQE, every stage record names the Dataset action's call site") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val qm = QueryMetrics.attach(spark.sparkContext, keepStages = true)
+    try {
+      val m = qm.measure("adaptive") {
+        spark.range(0, 1000, 1, 4).groupBy((col("id") % 7).as("k")).count().collect().length.toLong
+      }
+      // the shuffle-map stage is submitted from AQE's own thread pool
+      assert(m.stages.size >= 2, m.stages)
+      assert(m.stages.forall(s => s.callsite.startsWith("collect at QueryMetricsSpec.scala")),
+        m.stages.map(_.callsite))
+    } finally qm.detach()
+  }
 }

@@ -18,11 +18,12 @@ import graft.pregel.Pregel.{Callback, HookContext, MasterCallback, OutEdge}
 
 /**
  * Plumbing for the loops of [[GraphAlgorithms]] that run on the block
- * superstep runtime ([[graft.pregel.Pregel]]): wcc, kCore, pageRank and
- * HyperBall. A round is one Spark job of two stages — the message shuffle,
- * then the zip of the cached state, adjacency and inbox blocks — with no
- * query planning, codegen or closure cleaning in it, and every vertex
- * program below combines its messages map-side ([[Combining]]).
+ * superstep runtime ([[graft.pregel.Pregel]]): wcc, kCore, pageRank,
+ * HyperBall and kTruss. A round is one Spark job of two stages — the
+ * message shuffle, then the zip of the cached state, adjacency and inbox
+ * blocks — with no query planning, codegen or closure cleaning in it, and
+ * every vertex program below combines its messages map-side
+ * ([[Combining]]).
  *
  * The edge list comes from a DataFrame once per run: keyed by source on the
  * run's partitioner (so the runtime's own `partitionBy` is a no-op), with
@@ -53,19 +54,34 @@ private[algos] object BlockLoops {
 
   /** The `src`/`dst` rows of `edges` as long pairs keyed by source on
     * `part`, rows with a null endpoint dropped: each row as is (`forward`),
-    * reversed (`backward`) or both; self-loops only with `loops`. A map
-    * task ships one array of interleaved (src, dst) longs per destination
-    * partition, so the shuffle moves a few primitive arrays instead of one
-    * serialized record per pair. */
+    * reversed (`backward`) or both; self-loops only with `loops`; ids
+    * through [[mix]] with `mixed`. A map task ships one array of
+    * interleaved (src, dst) longs per destination partition, so the
+    * shuffle moves a few primitive arrays instead of one serialized record
+    * per pair. */
   def keyed(edges: DataFrame, part: HashPartitioner, forward: Boolean, backward: Boolean,
-            loops: Boolean): RDD[(Int, Array[Long])] = {
+            loops: Boolean, mixed: Boolean = false): RDD[(Int, Array[Long])] = {
     requireIntegral(edges, "src")
     requireIntegral(edges, "dst")
     InternalDF.internalRdd(edges.filter(col("src").isNotNull && col("dst").isNotNull)
         .select(col("src").cast(LongType), col("dst").cast(LongType)))
-      .mapPartitions(new PairBlocks(part, forward, backward, loops))
+      .mapPartitions(new PairBlocks(part, forward, backward, loops, mixed))
       .partitionBy(part) // a destination partition index routes to itself
   }
+
+  private val Mixer = 0x9E3779B97F4A7C15L
+  // Mixer's inverse mod 2^64 by Newton's iteration (3 → 96 correct bits)
+  private val Unmixer = Iterator.iterate(Mixer)(y => y * (2 - Mixer * y)).drop(5).next()
+
+  /** A bijection of the long ids that spreads them over the hash
+    * partitions, for a loop whose result does not depend on the id order.
+    * HashPartitioner keys on an id's low bits, and R-MAT-style ids put the
+    * degree mass on ids with zero low bits: unmixed, one of 4 partitions
+    * holds ~58% of a scale-20 R-MAT graph's edge endpoints. */
+  def mix(id: Long): Long = id * Mixer
+
+  /** The inverse of [[mix]]. */
+  def unmix(id: Long): Long = id * Unmixer
 
   /** [[keyed]] pairs → one row per distinct (src, dst) with its
     * multiplicity, sources grouped. */
@@ -85,14 +101,15 @@ private[algos] object BlockLoops {
 
   /** A run's final vertex values as a DataFrame over its state blocks, which
     * stay cached under it (Spark's ContextCleaner drops them with it); the
-    * adjacency blocks are released here. `id` is cast to `idType`. */
+    * adjacency blocks are released here. The `ids` columns are cast to
+    * `idType`. */
   def frame[VV](spark: SparkSession, res: Pregel.Result[Long, VV, _],
                 rows: Iterator[(Long, VV)] => Iterator[InternalRow],
-                schema: StructType, idType: DataType): DataFrame = {
+                schema: StructType, idType: DataType, ids: Set[String] = Set("id")): DataFrame = {
     res.unpersistEdges()
     val df = InternalDF.ofInternalRows(spark, res.vertices.mapPartitions(rows), schema)
     if (idType == LongType) df
-    else df.select(col("id").cast(idType).as("id") +: schema.fieldNames.tail.toSeq.map(col): _*)
+    else df.select(schema.fieldNames.toSeq.map(f => if (ids(f)) col(f).cast(idType).as(f) else col(f)): _*)
   }
 
   /** (id, value) schema with a long id. */
@@ -283,19 +300,329 @@ private[algos] object RegisterMax {
   }
 }
 
+/** Bulk k-truss peel in one run ([[GraphAlgorithms.kTruss]]) over the
+  * simple undirected graph: edge values are ignored, each distinct
+  * neighbour counts once. `masterCompute` picks each superstep's mode and
+  * hands it to the tasks through the [[TrussPeel.Mode]] aggregator:
+  *
+  *  - Degree: the (k−1)-core peel of [[DegreePeel]] (a truss vertex keeps
+  *    degree ≥ k−1 inside the truss), until a superstep in which no vertex
+  *    starts dying. Survivors do not halt, so all of them take part in
+  *    Orient.
+  *  - Orient: every core vertex sends its (id, degree) to its neighbours.
+  *  - Build: every core vertex keeps as its forward list the core
+  *    neighbours of higher (degree, id), ascending by id, and sends it.
+  *  - Count: for a triangle u < v < w in that order, the middle vertex v
+  *    finds it once, as w ∈ fwd(u) ∩ fwd(v) for the fwd(u) it received,
+  *    credits (v, w) in its own state and sends u one [[Credit]] for
+  *    (u, v) and the (u, w) edges.
+  *  - Filter: every vertex adds the credits it received to its own, drops
+  *    the forward edges whose support is below k − 2 and sends the rest,
+  *    which makes the next superstep the next round's Count. A round that
+  *    drops no edge anywhere halts the run, and so does round `maxRounds`
+  *    ([[exhausted]]).
+  *
+  * An edge's support lives with its lower endpoint, aligned to that
+  * vertex's forward list, so the final state holds the truss. Vertex ids
+  * are [[BlockLoops.mix]]ed, which spreads the heavy vertices of a skewed
+  * graph over the partitions and leaves the truss as it is. Forward lists
+  * are degeneracy-bounded (a hub's holds only its higher-degree
+  * neighbours), and no message is sent per triangle: a vertex sends one
+  * [[Forward]] instance to all its targets, which a shuffle block to one
+  * partition serializes once however many of that partition's vertices it
+  * reaches, and the combiner keeps messages to one target by reference
+  * ([[Bundle]]) and sums the credits to one owner into one array
+  * ([[Credits]]). */
+private[algos] final class TrussPeel(k: Int, maxRounds: Int)
+    extends ComputeFunction[Long, TrussVertex, Long, TrussMail] with Combining[TrussMail] {
+  import TrussPeel._
+
+  private val core = k - 1L
+
+  // driver side: the next superstep's mode and the rounds counted so far
+  private var mode = Degree
+  private var rounds = 0
+  private var capped = false
+
+  /** Whether the run stopped at `maxRounds` with edges still dropping, so
+    * the result may hold edges below the truss. Read after the run. */
+  def exhausted: Boolean = capped
+
+  // task side: this superstep's mode and this task's counts
+  private var now = Degree
+  private var dying = 0L
+  private var dropped = 0L
+
+  override def init(configs: Map[String, Any], cb: MasterCallback): Unit = {
+    cb.registerAggregator(Mode, Aggregators.LongSum)
+    cb.registerAggregator(Dying, Aggregators.LongSum)
+    cb.registerAggregator(Dropped, Aggregators.LongSum)
+  }
+
+  override def masterCompute(superstep: Int, cb: MasterCallback): Unit = {
+    mode match {
+      case Degree => if (cb.getAggregatedValue[Long](Dying) == 0L) mode = Orient
+      case Orient => mode = Build
+      case Build => mode = Count
+      case Count => mode = Filter; rounds += 1
+      case Filter =>
+        if (cb.getAggregatedValue[Long](Dropped) == 0L) cb.haltComputation()
+        else if (rounds >= maxRounds) { capped = true; cb.haltComputation() }
+        else mode = Count
+    }
+    cb.setAggregatedValue(Mode, mode)
+  }
+
+  override def preSuperstep(superstep: Int, aggregates: HookContext): Unit = {
+    now = aggregates(Mode).asInstanceOf[Long]
+    dying = 0L
+    dropped = 0L
+  }
+
+  override def postSuperstep(superstep: Int, aggregates: HookContext): Unit = {
+    aggregates.aggregate(Dying, dying)
+    aggregates.aggregate(Dropped, dropped)
+  }
+
+  def combine(a: TrussMail, b: TrussMail): TrussMail = a.fold(b)
+
+  def compute(superstep: Int, id: Long, value: TrussVertex, messages: Iterable[TrussMail],
+              edges: Iterable[OutEdge[Long, Long]],
+              cb: Callback[Long, TrussVertex, Long, TrussMail]): Unit = now match {
+    case Degree =>
+      if (value != null && value.degree == Dead) cb.voteToHalt()
+      else if (value != null && value.degree < core) {
+        cb.setNewVertexValue(DeadVertex)
+        cb.voteToHalt()
+      }
+      else {
+        var d = if (value == null) edges.knownSize.toLong else value.degree
+        messages.foreach(m => d -= m.asInstanceOf[Peeled].n)
+        if (value == null || d != value.degree) cb.setNewVertexValue(new TrussVertex(d, null, null))
+        if (d < core) {
+          dying += 1
+          edges.foreach(e => cb.sendMessageTo(e.target, Peeled.One))
+        }
+      }
+    case Orient =>
+      if (value.degree == Dead) cb.voteToHalt()
+      else {
+        val m = new Rank(id, value.degree)
+        edges.foreach(e => cb.sendMessageTo(e.target, m))
+      }
+    case Build =>
+      if (value.degree == Dead) cb.voteToHalt()
+      else {
+        val b = new mutable.ArrayBuilder.ofLong
+        items(messages).foreach { m =>
+          val r = m.asInstanceOf[Rank]
+          if (r.degree > value.degree || (r.degree == value.degree && r.id > id)) b += r.id
+        }
+        val fwd = b.result()
+        java.util.Arrays.sort(fwd)
+        cb.setNewVertexValue(new TrussVertex(value.degree, fwd, new Array[Int](fwd.length)))
+        send(id, fwd, cb)
+      }
+    case Count =>
+      val fwd = value.fwd
+      if (fwd == null || fwd.isEmpty) cb.voteToHalt()
+      else {
+        val sup = new Array[Int](fwd.length)
+        items(messages).foreach(m => triangles(id, m.asInstanceOf[Forward], fwd, sup, cb))
+        cb.setNewVertexValue(new TrussVertex(value.degree, fwd, sup))
+      }
+    case Filter =>
+      val fwd = value.fwd
+      if (fwd == null || fwd.isEmpty) cb.voteToHalt()
+      else {
+        val sup = value.sup.clone()
+        messages.foreach(_.asInstanceOf[CreditMail].addTo(sup))
+        var n = 0
+        sup.foreach(s => if (s >= k - 2) n += 1)
+        val next =
+          if (n == fwd.length) new TrussVertex(value.degree, fwd, sup)
+          else {
+            dropped += fwd.length - n
+            val f = new Array[Long](n)
+            val s = new Array[Int](n)
+            var i = 0
+            var j = 0
+            while (j < fwd.length) {
+              if (sup(j) >= k - 2) { f(i) = fwd(j); s(i) = sup(j); i += 1 }
+              j += 1
+            }
+            new TrussVertex(value.degree, f, s)
+          }
+        cb.setNewVertexValue(next)
+        send(id, next.fwd, cb)
+      }
+  }
+
+  /** One [[Forward]] instance to every target of `fwd`; a vertex without
+    * forward edges has nothing left to do. */
+  private def send(id: Long, fwd: Array[Long], cb: Callback[Long, TrussVertex, Long, TrussMail]): Unit =
+    if (fwd.isEmpty) cb.voteToHalt()
+    else {
+      val m = new Forward(id, fwd)
+      fwd.foreach(t => cb.sendMessageTo(t, m))
+    }
+
+  /** The triangles (f.owner, id, w) for w ∈ f.fwd ∩ fwd: credits (id, w) in
+    * `sup` and sends the owner one [[Credit]] for them. */
+  private def triangles(id: Long, f: Forward, fwd: Array[Long], sup: Array[Int],
+                        cb: Callback[Long, TrussVertex, Long, TrussMail]): Unit = {
+    val theirs = f.fwd
+    val ws = new mutable.ArrayBuilder.ofInt
+    // walk the shorter list, galloping through the longer one
+    val uShort = theirs.length <= fwd.length
+    val (s, l) = if (uShort) (theirs, fwd) else (fwd, theirs)
+    var p = 0
+    var q = 0
+    while (p < s.length && q < l.length) {
+      q = seek(l, q, s(p))
+      if (q < l.length && l(q) == s(p)) {
+        if (uShort) { ws += p; sup(q) += 1 } else { ws += q; sup(p) += 1 }
+        q += 1
+      }
+      p += 1
+    }
+    val at = ws.result()
+    if (at.nonEmpty)
+      cb.sendMessageTo(f.owner, new Credit(theirs.length, java.util.Arrays.binarySearch(theirs, id), at))
+  }
+}
+
+private[algos] object TrussPeel {
+  val Mode = "ktruss.mode"
+  val Dying = "ktruss.dying"
+  val Dropped = "ktruss.dropped"
+
+  // superstep modes
+  val Degree = 0L
+  val Orient = 1L
+  val Build = 2L
+  val Count = 3L
+  val Filter = 4L
+
+  val Dead = -1L
+  /** Every dead vertex's value: one instance, so a state block serializes
+    * it once. */
+  val DeadVertex = new TrussVertex(Dead, null, null)
+
+  /** (src, dst, support) rows, src < dst. */
+  val schema: StructType = StructType(Seq(StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false), StructField("support", LongType, nullable = false)))
+
+  /** The messages, a [[Bundle]] unfolded. */
+  def items(messages: Iterable[TrussMail]): Iterator[TrussMail] = messages.iterator.flatMap {
+    case b: Bundle => b.iterator
+    case m => Iterator.single(m)
+  }
+
+  /** The first index at or after `from` whose value is ≥ x in ascending
+    * `a` (a.length if none): exponential steps, then a binary search. */
+  def seek(a: Array[Long], from: Int, x: Long): Int = {
+    var lo = from
+    var hi = from
+    var step = 1
+    while (hi < a.length && a(hi) < x) { lo = hi + 1; hi += step; step <<= 1 }
+    hi = math.min(hi, a.length)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (a(mid) < x) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+}
+
+/** A k-truss vertex: its degree in the (k−1)-core peel ([[TrussPeel.Dead]]
+  * once peeled) and, from Build on, its forward list ascending with one
+  * support count per forward edge. */
+private[algos] final class TrussVertex(val degree: Long, val fwd: Array[Long], val sup: Array[Int])
+    extends Serializable
+
+/** A [[TrussPeel]] message. Two to the same target fold into one; neither
+  * input is written, so an instance sent to many targets stays shared. */
+private[algos] sealed abstract class TrussMail extends Serializable {
+  def fold(b: TrussMail): TrussMail = new Bundle(this, b)
+}
+
+/** `n` degree decrements. */
+private[algos] final class Peeled(val n: Long) extends TrussMail {
+  override def fold(b: TrussMail): TrussMail = new Peeled(n + b.asInstanceOf[Peeled].n)
+}
+
+private[algos] object Peeled {
+  val One = new Peeled(1L)
+}
+
+/** A core neighbour's id and degree. */
+private[algos] final class Rank(val id: Long, val degree: Long) extends TrussMail
+
+/** `owner`'s forward list. */
+private[algos] final class Forward(val owner: Long, val fwd: Array[Long]) extends TrussMail
+
+/** Messages to one target kept by reference, in send order. */
+private[algos] final class Bundle(a: TrussMail, b: TrussMail) extends TrussMail {
+  private var items = Array(a, b)
+  private var size = 2
+
+  override def fold(m: TrussMail): TrussMail = {
+    if (size == items.length) items = java.util.Arrays.copyOf(items, 2 * size)
+    items(size) = m
+    size += 1
+    this
+  }
+
+  def iterator: Iterator[TrussMail] = items.iterator.take(size)
+}
+
+/** Support credits to the owner of a forward list. */
+private[algos] sealed abstract class CreditMail extends TrussMail {
+  /** Adds the credits to `sup`, aligned to the owner's forward list. */
+  def addTo(sup: Array[Int]): Unit
+}
+
+/** Credits to the owner of a forward list of `length` edges: one per
+  * triangle on the edge at `middle` (the sender's), and one on each edge
+  * at `ws`. */
+private[algos] final class Credit(val length: Int, val middle: Int, val ws: Array[Int])
+    extends CreditMail {
+  override def fold(b: TrussMail): TrussMail = new Credits(new Array[Int](length)).fold(this).fold(b)
+
+  def addTo(sup: Array[Int]): Unit = {
+    sup(middle) += ws.length
+    ws.foreach(w => sup(w) += 1)
+  }
+}
+
+/** Credits to one owner summed per forward edge. */
+private[algos] final class Credits(val sums: Array[Int]) extends CreditMail {
+  override def fold(b: TrussMail): TrussMail = {
+    b.asInstanceOf[CreditMail].addTo(sums)
+    this
+  }
+
+  def addTo(sup: Array[Int]): Unit = {
+    var j = 0
+    while (j < sums.length) { sup(j) += sums(j); j += 1 }
+  }
+}
+
 // ---- task functions, one class per RDD op ----------------------------------
 
 /** (src, dst) long rows → (destination partition, interleaved (src, dst)
   * pairs in the chosen directions, keyed by their src). */
 private[algos] final class PairBlocks(part: HashPartitioner, forward: Boolean, backward: Boolean,
-                                      loops: Boolean)
+                                      loops: Boolean, mixed: Boolean)
     extends (Iterator[InternalRow] => Iterator[(Int, Array[Long])]) with Serializable {
   def apply(rows: Iterator[InternalRow]): Iterator[(Int, Array[Long])] = {
     val out = Array.fill(part.numPartitions)(new mutable.ArrayBuilder.ofLong)
     def add(s: Long, d: Long): Unit = { val b = out(part.getPartition(s)); b += s; b += d }
+    def id(r: InternalRow, i: Int): Long = if (mixed) BlockLoops.mix(r.getLong(i)) else r.getLong(i)
     rows.foreach { r =>
-      val s = r.getLong(0)
-      val d = r.getLong(1)
+      val s = id(r, 0)
+      val d = id(r, 1)
       if (s != d || loops) {
         if (forward) add(s, d)
         if (backward) add(d, s)
@@ -401,12 +728,14 @@ private[algos] final class WeightedEdges
   }
 }
 
-/** Pair blocks → (src, 0) per pair: every endpoint of the undirected edge
-  * list, repeated (the runtime keeps one row per id). */
-private[algos] final class Sources
-    extends (Iterator[(Int, Array[Long])] => Iterator[(Long, Long)]) with Serializable {
-  def apply(blocks: Iterator[(Int, Array[Long])]): Iterator[(Long, Long)] =
-    blocks.flatMap { case (_, b) => Iterator.range(0, b.length, 2).map(i => (b(i), 0L)) }
+/** Pair blocks → (src, `init`) per pair: every edge source, repeated (the
+  * runtime keeps one row per id) — every endpoint of an undirected edge
+  * list, or for HyperBall an edge source that is not a vertex but still
+  * gathers its successors' registers. */
+private[algos] final class Sources[V](init: V)
+    extends (Iterator[(Int, Array[Long])] => Iterator[(Long, V)]) with Serializable {
+  def apply(blocks: Iterator[(Int, Array[Long])]): Iterator[(Long, V)] =
+    blocks.flatMap { case (_, b) => Iterator.range(0, b.length, 2).map(i => (b(i), init)) }
 }
 
 /** Vertex ids → (id, id): every vertex starts labelled with itself. */
@@ -435,14 +764,6 @@ private[algos] final class PackedCounters(lanes: Int)
     extends (Iterator[InternalRow] => Iterator[(Long, Array[Long])]) with Serializable {
   def apply(rows: Iterator[InternalRow]): Iterator[(Long, Array[Long])] =
     rows.map(r => (r.getLong(0), Array.tabulate(lanes)(i => r.getLong(i + 1))))
-}
-
-/** Pair blocks → (src, no counter) per pair, so an edge source that is
-  * not a vertex still gathers its successors' registers. */
-private[algos] final class EdgeSources
-    extends (Iterator[(Int, Array[Long])] => Iterator[(Long, Array[Long])]) with Serializable {
-  def apply(blocks: Iterator[(Int, Array[Long])]): Iterator[(Long, Array[Long])] =
-    blocks.flatMap { case (_, b) => Iterator.range(0, b.length, 2).map(i => (b(i), null)) }
 }
 
 /** One row per id: its counter, or an empty counter for an id that only
@@ -483,4 +804,19 @@ private[algos] final class CounterRows
     extends (Iterator[(Long, Array[Long])] => Iterator[InternalRow]) with Serializable {
   def apply(values: Iterator[(Long, Array[Long])]): Iterator[InternalRow] =
     values.map { case (id, c) => new GenericInternalRow((id +: c.toSeq).toArray[Any]) }
+}
+
+/** Truss vertices over mixed ids → (src, dst, support) rows, one per
+  * forward edge. */
+private[algos] final class TrussRows
+    extends (Iterator[(Long, TrussVertex)] => Iterator[InternalRow]) with Serializable {
+  def apply(values: Iterator[(Long, TrussVertex)]): Iterator[InternalRow] =
+    values.flatMap { case (id, v) =>
+      val fwd = if (v == null || v.fwd == null) Array.emptyLongArray else v.fwd
+      val a = BlockLoops.unmix(id)
+      Iterator.range(0, fwd.length).map { j =>
+        val b = BlockLoops.unmix(fwd(j))
+        new GenericInternalRow(Array[Any](math.min(a, b), math.max(a, b), v.sup(j).toLong))
+      }
+    }
 }

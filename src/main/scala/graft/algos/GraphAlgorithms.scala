@@ -14,8 +14,8 @@ import graft.pregel.Pregel
  * intersection family, over DataFrame inputs and outputs.
  *
  * Two loop shapes:
- *  - wcc, kCore, pageRank and HyperBall run on the block superstep runtime
- *    (graft.pregel.Pregel, vertex programs in BlockLoops.scala): the
+ *  - wcc, kCore, pageRank, HyperBall and kTruss run on the block superstep
+ *    runtime (graft.pregel.Pregel, vertex programs in BlockLoops.scala): the
  *    adjacency is laid out once as cached CSR blocks, and a round is ONE
  *    Spark job of two stages — the message shuffle, then the zip of state,
  *    adjacency and inbox blocks — with messages combined map-side (min,
@@ -37,14 +37,6 @@ object GraphAlgorithms {
     * materialization to the caller's next action so one job does both
     * (used inside the iterative loops where a count() follows immediately). */
   private def cp(df: DataFrame): DataFrame = df.localCheckpoint(true)
-  /** cp at SERIALIZED storage — for loop-carried GRAPH-SIZED checkpoints
-    * whose blocks stay pinned while later stages read them: deserialized
-    * row objects cost ~2× the bytes and fragment an 8 g heap enough to
-    * flip marginal scale-22 rounds into GCLocker OOMs (measured on the
-    * k-truss canonical-edge and sweep checkpoints). */
-  private def cpSer(df: DataFrame): DataFrame =
-    df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
   private def cpLazy(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
   /** Stats barrier for LOOP-carried checkpoints. localCheckpoint cuts the
@@ -52,9 +44,9 @@ object GraphAlgorithms {
     * new leaf; size-only estimation multiplies child sizes at each join, so
     * a loop whose round-r+1 plan joins k relations derived from round r's
     * checkpoint grows the carried BigInt to k^r digits — at k ≈ 15 (the
-    * k-truss support plan) the PLANNER stalls for minutes in BigInteger
-    * multiplication by round ~6 (observed: single-core Toom-Cook grind in
-    * `canBroadcastBySize`, zero tasks). Wrapping the loop variable resets
+    * former DataFrame k-truss support plan) the PLANNER stalled for minutes
+    * in BigInteger multiplication by round ~6 (observed: single-core
+    * Toom-Cook grind in `canBroadcastBySize`, zero tasks). Wrapping the loop variable resets
     * the estimate to the constant default, making per-round planning cost
     * flat; broadcast decisions inside the loops don't regress because the
     * adjacency/degree joins carry explicit count-based hints
@@ -497,8 +489,7 @@ object GraphAlgorithms {
     prepareNeighborhoodFromEdges(g.edges, hubDegreeCap, assumeCanonical)
 
   /** [[prepareNeighborhood]] over a bare (src, dst) edge frame — the entry
-    * point for callers without a KGraph (kTruss rebuilds this per peel
-    * round from its surviving edge set). */
+    * point for callers without a KGraph. */
   private[graft] def prepareNeighborhoodFromEdges(
       edges: DataFrame,
       hubDegreeCap: Int = HubDegreeCap,
@@ -894,342 +885,38 @@ object GraphAlgorithms {
   /** k-truss: the maximal subgraph where every EDGE sits in ≥ k−2
     * triangles — the edge-level density peel (stronger than k-core:
     * cohesion through shared neighbors, not raw degree; the standard
-    * community-core primitive). Each round picks its physical plan from a
-    * cost model over what the round MOVES:
+    * community-core primitive). Runs as one vertex program on the block
+    * superstep runtime ([[TrussPeel]]): a (k−1)-core degree peel first
+    * (every truss vertex keeps degree ≥ k−1 inside the truss), then bulk
+    * support rounds of two supersteps each over the core's edges, oriented
+    * once toward their higher-(degree, id) endpoint. A round recounts every
+    * live edge's triangles (Latapy's compact-forward enumeration, each
+    * triangle found once as w ∈ fwd(u) ∩ fwd(v) at its middle vertex) and
+    * drops the edges below k−2; a round that drops nothing ends the run.
+    * What moves per round is degeneracy-bounded — forward lists, and
+    * credits folded per owner — never a record per triangle.
     *
-    *  - MAJORITY-removal rounds (the first filters on a heavy tail) run a
-    *    full support sweep over the survivors — ORIENTED: each edge points
-    *    at its higher-(degree, id) endpoint, each triangle is enumerated
-    *    exactly once as w ∈ fwd(u) ∩ fwd(v) (codegen'd galloping kernel),
-    *    and supports come from one count over the triple stream exploded
-    *    to its three edges. Wire cost is degeneracy-bounded (a hub's
-    *    forward list holds only its higher-degree neighbors), not Σdeg².
-    *    The triple stream is NEVER materialized: it flows straight through
-    *    the partial-aggregating support count inside one codegen stage, so
-    *    peak memory is the per-partition edge-count hash map, not the
-    *    triangle count (the r14 variant localCheckpointed ALL triples to
-    *    make destroyed-witness recovery a semi-join — hundreds of millions
-    *    of exploded rows held in block storage on triangle-dense graphs:
-    *    12.5 GB spill and an 8 g-heap OOM at R-MAT scale 20). Majority
-    *    rounds shrink the edge set geometrically, so ALL sweeps together
-    *    cost ≤ 2× the first; a sweep whose removals turn out to be the
-    *    MINORITY hands exact survivor supports to the incremental regime
-    *    by decrementing the removed edges' destroyed triangles against the
-    *    pre-removal adjacency (work bounded by the removed slice).
-    *  - MINORITY-removal rounds (everything after the burst phase) peel
-    *    INCREMENTALLY: enumerate the triangles DESTROYED by the dropped
-    *    edges — witnesses w ∈ N(a) ∩ N(b) per removed edge via the same
-    *    aligned-bucket machinery over an adjacency built PER ROUND and
-    *    RESTRICTED to the removed edges' endpoint vertices, deduped as
-    *    sorted vertex triples — and decrement the supports of each
-    *    destroyed triangle's surviving edges. Both the adjacency build and
-    *    the witness intersections are proportional to the REMOVED edges
-    *    and their triangles, not the surviving graph; convergence (no edge
-    *    below k−2) is detected from the maintained support column with no
-    *    final sweep at all. `rebuildFraction` = 0.0 selects the
-    *    pure-full-sweep reference mode the equivalence specs peel against;
-    *    any positive value selects the cost-model peel.
-    *
-    * `corePrefilter` (default on, k ≥ 4) first shrinks the graph to the
-    * (k−1)-core — a superset of the k-truss (every truss vertex keeps
-    * degree ≥ k−1 inside the truss) — with the DEGREE peel, whose rounds
-    * move only degree deltas (59 MB at R-MAT scale 20) instead of
-    * neighborhood arrays; the support sweep then runs on the core
-    * subgraph only.
-    *
-    * The pre-r14 policy swept on ANY ≥5% burst — 62 GB / 541 s measured at
-    * R-MAT scale 20 (SCALE.md); decrement-always OOMs the same drill by
-    * enumerating nearly every triangle on a majority-removal first round.
-    *
-    * Monotone, so it terminates; rounds are data-bounded, each cut with
-    * localCheckpoint. Input is canonicalized (undirected simple graph:
-    * self-loops dropped, duplicates merged); returns the truss edges with
-    * their converged support as (src, dst, support) with src < dst. Logs a
-    * warning if `maxIter` exhausts before the fixpoint — the result is
-    * then only an upper bound on the k-truss. */
-  /** Scale-adaptive partition count for the k-truss support sweep: the
-    * session default (tuned to the core count) until the live edge count
-    * outgrows it, then ~150k edge keys per partition, capped at 4096.
-    * `parts` sizes three things in TriangleCreditSweep at once — the keyed
-    * edge layout (per-task run slice), the per-partition fv map (finer
-    * parts = smaller maps but less demand dedup), and the credit partials'
-    * combining (coarser parts = better map-side combining, bigger shuffle
-    * blocks; 50k/partition measured +71% shufW at R-MAT scale 22 under
-    * the r16 sweep — the trade carries over). Derived from the CURRENT
-    * edge set each sweep — a constant tuned to either local mode or one
-    * cluster size is exactly what the guide's §2 warns against. */
-  private val TrussEdgesPerPartition = 150000L
-  private def supportParts(spark: org.apache.spark.sql.SparkSession,
-                           n: Long): Int = {
-    val base = spark.sessionState.conf.numShufflePartitions
-    math.max(base, math.min(4096L, n / TrussEdgesPerPartition).toInt)
-  }
-
-  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 100,
-             hubDegreeCap: Int = HubDegreeCap,
-             rebuildFraction: Double = 0.05,
-             corePrefilter: Boolean = true): DataFrame = {
+    * Input is canonicalized (undirected simple graph: null endpoints and
+    * self-loops dropped, duplicates and both directions merged); returns
+    * the truss edges with their support as (src, dst, support) with
+    * src < dst. `maxIter` caps the support rounds: when it runs out before
+    * the fixpoint a warning is logged, and the result is the last round's
+    * survivors with the supports that round counted — an upper bound on
+    * the k-truss. */
+  def kTruss(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 3, "k must be at least 3")
-    require(rebuildFraction >= 0.0 && rebuildFraction <= 1.0,
-      "rebuildFraction must be in [0, 1]")
-    val cnt = graft.functions.GraphSetExpressions
-      .sortedIntersectCount(col("na"), col("nb"))
-    val inter = graft.functions.GraphSetExpressions
-      .sortedIntersect(col("na"), col("nb"))
-    // support per canonical edge over p's edge set; hub edges carry several
-    // aligned-bucket rows whose partial counts sum, and a filtered
-    // mixed-edge expansion can emit zero rows for an edge with a
-    // provably-empty intersection — the left join owes it support 0.
-    def supportOf(p: UndirectedNeighborhood): DataFrame = {
-      val sup = edgeAdjacency(p)
-        .groupBy(col("a"), col("b")).agg(sum(cnt.cast("long")).as("support"))
-      p.e.join(sup, Seq("a", "b"), "left_outer")
-        .select(col("a"), col("b"),
-          coalesce(col("support"), lit(0L)).as("support"))
-    }
-    // ORIENTED full sweep: support for every current edge from ONE
-    // degree-ordered triangle enumeration (Latapy's compact-forward /
-    // Shun–Tangwongsan shape). Orient each edge toward its higher-(deg,id)
-    // endpoint; every triangle then has exactly one vertex with two
-    // out-legs, so w ∈ fwd(u) ∩ fwd(v) over the oriented edge (u,v)
-    // enumerates each triangle ONCE. The wire cost is Σ_e |fwd| shipped
-    // per incident edge — bounded by the graph's degeneracy, NOT Σdeg²:
-    // a 10⁵-degree hub's forward list holds only its higher-degree
-    // neighbors (near-empty), so hub edges ship next to nothing where the
-    // per-edge N(a)∩N(b) sweep shipped the hub's whole adjacency per edge
-    // (measured on the scale-20 drill: 37.8 GB total under the per-edge
-    // sweep). Supports = each triple exploded to its 3 canonical edges +
-    // one count aggregate, all inside ONE stage with map-side partial
-    // aggregation — the triple rows are never stored or shuffled, only
-    // (edge, partial count) aggregates leave the stage, so peak memory is
-    // bounded by the edge count regardless of how triangle-dense the graph
-    // is. Pathological regular cores (K_n) make fwd lists long, but there
-    // the work equals the triangle count — intrinsic.
-    //
-    // The orientation is fixed ONCE per full phase and REUSED by its later
-    // sweeps: correctness needs only SOME fixed total order (each triangle
-    // has exactly one minimal vertex under it), so survivors keep their
-    // direction as edges drop; the entry degrees keep forward lists
-    // degeneracy-bounded and a shrinking graph only shortens them. Saves
-    // the degree aggregation + two attach joins on every sweep after the
-    // first.
-    def orient(eCur: DataFrame): DataFrame = {
-      val deg = eCur.select(explode(array(col("a"), col("b"))).as("x"))
-        .groupBy(col("x")).agg(count(lit(1)).as("d"))
-      eCur
-        .join(deg.select(col("x").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("x").as("b"), col("d").as("db")), Seq("b"))
-        .select(when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("u"), col("b").as("v")))
-          .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-    }
-    // (a, b, support > 0) over the oriented edge set: rows exist only for
-    // edges in ≥ 1 triangle. Every enumerated triangle edge IS a current
-    // edge ((u,v) ∈ dirE; w ∈ fwd(u) and w ∈ fwd(v)), so a missing row
-    // means support 0 — which any k ≥ 3 filter removes anyway; skipping
-    // the support-0 attach saves a full-edge-set outer join per sweep, and
-    // a zero-support edge destroys no triangles, so the decrement path
-    // never needs it either.
-    //
-    // r17: the sweep is the cogroup-style TriangleCreditSweep — forward
-    // lists ship once per DEMANDING PARTITION over the keyed edge layout
-    // instead of once per edge through a join exchange (the r16 SQL
-    // formulation moved Σ_u|fwd(u)|² list entries — ~12.5 GB/sweep at
-    // R-MAT scale 22 — and its array-stream sorts were the dominant
-    // spill). See TriangleCreditSweep's header for the full design and
-    // equivalence argument; `parts` keeps the same scale-adaptive sizing
-    // (~150k live edges per partition, supportParts below). Returns
-    // ALREADY materialized (serialized localCheckpoint).
-    def sweepDir(dirE: DataFrame, parts: Int): DataFrame =
-      TriangleCreditSweep.sweep(dirE, parts)
-    def prep(eCanon: DataFrame): UndirectedNeighborhood =
-      prepareNeighborhoodFromEdges(
-        eCanon.select(col("a").as("src"), col("b").as("dst")),
-        hubDegreeCap, assumeCanonical = true)
-    // Adjacency of `prev` RESTRICTED to the endpoint vertices of `removed`
-    // — exactly the rows the witness intersection probes, so building more
-    // would be waste. Degrees (and therefore hub splitting) are TRUE
-    // degrees in prev: the semi-join keeps or drops whole vertices, never
-    // slices an edge list. eCount is the FULL prev edge count — adjSide's
-    // broadcast heuristic reads it as "how big a graph is this", and the
-    // restricted adjacency of a small removed set can still be huge when
-    // the touched vertices are hubs. The scan/filter side of this build is
-    // O(|prev|) per decrement round; only the groupBy-collect output is
-    // removal-proportional. (r16 measured a join-based witness enumeration
-    // as the alternative — one prev scan, no arrays — and it LOST 5× on a
-    // 4.3%-removal round at R-MAT scale 20: without the galloping sorted
-    // intersection a removed hub edge enumerates every (a, w) candidate
-    // leg instead of pruning to the actual witnesses, so the array build
-    // pays for itself at any removal size that matters.)
-    def prepTouched(prev: DataFrame, removed: DataFrame,
-                    eCount: Long): UndirectedNeighborhood = {
-      val touched = removed
-        .select(explode(array(col("a"), col("b"))).as("src")).distinct()
-      val bd = bidir(prev.select(col("a").as("src"), col("b").as("dst")),
-          withValue = false)
-        .join(touched, Seq("src"), "left_semi")
-      val hubs = cp(bd.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") > hubDegreeCap)
-        .select(col("src"), hubBucketCount(col("deg"), hubDegreeCap).as("nbuckets")))
-      val adj = cp(adjacencyArrays(bd, hubs))
-      UndirectedNeighborhood(prev, adj, hubs, eCount, hubs.count())
-    }
-    // Supports of `surv` after deleting `removed` from prev = surv ∪
-    // removed, given exact supports on surv w.r.t. prev. Witnesses
-    // w ∈ N(a) ∩ N(b) come from a per-round adjacency of prev restricted
-    // to the removed edges' endpoints — EXACT (both legs (a,w) and (b,w)
-    // are prev edges by construction, so no validation pass exists) and
-    // shuffle-proportional to the removed slice, not the surviving graph.
-    // Each destroyed triangle is counted once (distinct sorted triple, so
-    // a triangle losing 2–3 edges in one round can't double-decrement) and
-    // decrements only its surviving edges.
-    def decremented(prev: DataFrame, removed: DataFrame, surv: DataFrame,
-                    eCount: Long): DataFrame = {
-      val pT = prepTouched(prev, removed, eCount)
-      val witnesses = edgeAdjacency(pT.copy(e = removed.select(col("a"), col("b"))))
-        .select(col("a"), col("b"), explode(inter).as("w"))
-      decrementsFromWitnesses(witnesses, surv)
-    }
-    // Shared tail of every decrement path: (a, b, w) destroyed-triangle
-    // witness rows → distinct sorted triples (a triangle losing 2–3 edges
-    // in one round must not double-decrement) → per-surviving-edge deltas.
-    def decrementsFromWitnesses(witnesses: DataFrame,
-                                surv: DataFrame): DataFrame = {
-      val tri = witnesses
-        .select(array_sort(array(col("a"), col("b"), col("w"))).as("t"))
-        .distinct()
-        .select(col("t").getItem(0).as("x"), col("t").getItem(1).as("y"),
-          col("t").getItem(2).as("z"))
-      val delta = tri.select(explode(array(
-          struct(col("x").as("a"), col("y").as("b")),
-          struct(col("x").as("a"), col("z").as("b")),
-          struct(col("y").as("a"), col("z").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("dec"))
-      surv.join(delta, Seq("a", "b"), "left_outer")
-        .select(col("a"), col("b"),
-          (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
-    }
-    var e = barrier(cpSer(canonicalEdges(edges)))   // (a, b): the current set
-    if (corePrefilter && k >= 4) {
-      // k-truss ⊆ (k−1)-core (every truss vertex keeps degree ≥ k−1
-      // inside the truss), and the degree peel moves only degree DELTAS
-      // (59 MB at R-MAT scale 20 vs the support sweep's tens of GB) — so
-      // shrink the graph with the cheap peel BEFORE the expensive one.
-      // On the scale-20 drill this halves the first sweep's input; at
-      // k=3 the 2-core only trims trees, rarely worth the pass.
-      val core = kCore(
-        e.select(col("a").as("src"), col("b").as("dst")), k - 1)
-        .select(col("id"))
-      e = barrier(cpSer(e
-        .join(core.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(core.select(col("id").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))))
-    }
-    var n = e.count()
-    // the full phase's fixed orientation (u, v); null outside a full phase
-    var dirE: DataFrame = null
-    // When non-null: cp'd (a, b, support), EXACT within the current set —
-    // the peel then proceeds by decrement alone (tail regime). When null,
-    // the next round is a full sweep: prep + support + filter in ONE fused
-    // materialization (only survivors are ever written), exactly the
-    // big-round plan the pre-incremental version used.
-    var supExact: DataFrame = null
-    var iter = 0
-    var result: DataFrame = null
-    while (result == null && iter < maxIter) {
-      // The per-round plan choice is a cost model, not a fixed phase order:
-      //  - an (oriented) SWEEP ships every SURVIVING edge's forward list —
-      //    degeneracy-bounded, the cheap per-edge constant;
-      //  - a DECREMENT ships every REMOVED edge's FULL neighborhoods plus
-      //    the triangles they destroy — exact per-edge intersections, the
-      //    expensive per-edge constant (a removed edge at a hub ships the
-      //    hub's whole adjacency; a surviving hub edge in the oriented
-      //    sweep ships a near-empty forward list).
-      // With that asymmetry the crossover sits well below one half: sweep
-      // whenever removals exceed ~15% of the round and decrement only true
-      // slivers. Sweeps at ≥15% shrinkage still telescope (total ≤ ~7× the
-      // first, each degeneracy-bounded and unmaterialized), while the
-      // measured alternative on a 44%-removal round at sf0.1 — per-edge
-      // decrement of 105k removed co-purchase edges — cost MORE than
-      // re-sweeping the 133k survivors. The failure modes this threshold
-      // avoids were both measured at R-MAT scale 20: per-edge sweeps on
-      // every ≥5% burst (62 GB, pre-r14) and decrement-always (37 GB + an
-      // executor OOM on the 90%-removal first round).
-      val SweepMajority = 0.15
-      if (supExact != null) {
-        val removed = supExact.filter(col("support") < k - 2)
-        val nR = removed.count()
-        if (nR == 0L) result = supExact
-        else {
-          val surv = supExact.filter(col("support") >= k - 2)
-          if (nR >= SweepMajority * n) {
-            // burst (rare outside the first rounds): re-sweeping the
-            // smaller survivor set beats enumerating the big removal's
-            // triangles
-            e = surv.select(col("a"), col("b")); supExact = null
-            dirE = null // re-orient from the current survivor degrees
-          } else {
-            supExact = barrier(cpSer(decremented(
-              supExact.select(col("a"), col("b")), removed, surv, n)))
-            e = supExact.select(col("a"), col("b"))
-          }
-          n -= nR
-        }
-      } else if (rebuildFraction > 0.0) {
-        // ONE oriented enumeration per sweep, streamed straight into the
-        // per-edge support aggregate — no triple materialization at any
-        // removal fraction. Post-filter survivor supports are recovered by
-        // the SAME cost model the incremental regime uses: a burst removal
-        // just re-sweeps the (geometrically smaller) survivor set next
-        // round, while a sliver removal enumerates its destroyed triangles
-        // against the pre-removal restricted adjacency and hands exact
-        // supports to the decrement regime.
-        if (dirE == null) dirE = barrier(cpSer(orient(e)))
-        // sweepDir materializes internally (it must outlive its keyed edge
-        // checkpoint) — barrier alone resets the carried stats estimate
-        val swept = barrier(sweepDir(dirE, supportParts(edges.sparkSession, n)))
-        val f = swept.filter(col("support") >= k - 2)
-        val n2 = f.count()
-        if (n2 == n || n2 == 0L) result = f // converged (incl. n == 0) or empty
-        else if (n - n2 >= SweepMajority * n) {
-          e = f.select(col("a"), col("b")); n = n2
-          dirE = barrier(cpSer(dirE.join(f.select(col("a"), col("b")),
-            least(col("u"), col("v")) === col("a") &&
-              greatest(col("u"), col("v")) === col("b"), "left_semi")))
-        } else {
-          // swept.filter(< k−2) omits support-0 removals by construction —
-          // they destroy no triangles, so the witness enumeration loses
-          // nothing; prev (= e) still carries the full pre-removal set for
-          // the restricted adjacency
-          supExact = barrier(cpSer(decremented(
-            e, swept.filter(col("support") < k - 2), f, n)))
-          e = supExact.select(col("a"), col("b")); n = n2
-          dirE = null
-        }
-      } else {
-        // rebuildFraction == 0: the pure-full-sweep reference mode the
-        // equivalence specs peel both ways against
-        val p = prep(e)
-        val f = barrier(cp(supportOf(p).filter(col("support") >= k - 2)))
-        val n2 = f.count()
-        if (n2 == n || n2 == 0L) result = f // converged (incl. n == 0) or empty
-        else { e = f.select(col("a"), col("b")); n = n2 }
-      }
-      iter += 1
-    }
-    if (result == null) {
+    val spark = edges.sparkSession
+    val keyed = BlockLoops.keyed(edges, BlockLoops.partitioner(spark),
+      forward = true, backward = true, loops = false, mixed = true)
+    val peel = new TrussPeel(k, math.max(1, maxIter))
+    val res = Pregel.run(spark, peel,
+      keyed.mapPartitions(new Sources[TrussVertex](null), preservesPartitioning = true),
+      BlockLoops.counted(keyed), maxIterations = Int.MaxValue)
+    if (peel.exhausted)
       logger.warn(s"kTruss(k=$k) exhausted maxIter=$maxIter before convergence; " +
         "the returned edge set may still contain sub-truss edges")
-      // pre-incremental exhaustion semantics: supports w.r.t. the final
-      // edge set, filtered once more
-      result =
-        if (supExact != null) supExact.filter(col("support") >= k - 2)
-        else supportOf(prep(e)).filter(col("support") >= k - 2)
-    }
-    result.select(col("a").as("src"), col("b").as("dst"), col("support"))
+    BlockLoops.frame(spark, res, new TrussRows, TrussPeel.schema, BlockLoops.widerIdType(edges),
+      Set("src", "dst"))
   }
 
   /** k-core: the maximal subgraph where every vertex keeps degree ≥ k —
@@ -1252,7 +939,7 @@ object GraphAlgorithms {
     val keyed = BlockLoops.keyed(edges, BlockLoops.partitioner(spark),
       forward = true, backward = true, loops = true)
     val res = Pregel.run(spark, new DegreePeel(k),
-      keyed.mapPartitions(new Sources, preservesPartitioning = true), BlockLoops.counted(keyed),
+      keyed.mapPartitions(new Sources(0L), preservesPartitioning = true), BlockLoops.counted(keyed),
       maxIterations = BlockLoops.supersteps(maxIter))
     if (res.state == "MAX_ITERATIONS")
       logger.warn(s"kCore(k=$k) exhausted maxIter=$maxIter before convergence; " +
@@ -1311,7 +998,7 @@ object GraphAlgorithms {
         .select(col("id").cast(LongType) +: regCols.map(col): _*))
       .mapPartitions(new PackedCounters(regCols.size))
     val sources = BlockLoops.keyed(g.edges, part, forward = true, backward = false, loops = false)
-      .mapPartitions(new EdgeSources, preservesPartitioning = true)
+      .mapPartitions(new Sources[Array[Long]](null), preservesPartitioning = true)
     val vertices = counters.partitionBy(part).union(sources)
       .mapPartitions(new FirstCounters(regCols.size), preservesPartitioning = true)
     val cf = new RegisterMax(p, withEstimates)

@@ -152,9 +152,22 @@ private[pregel] object AdjBlock {
     new AdjBlock(ids, orphans.result(), offsets, targets, values, dups)
   }
 
+  /** Whether a row's targets repeat one: a scan for adjacent equal Long
+    * targets decides an ascending row (EdgeRuns rows always are); only a
+    * row that is not ascending, or of another id type, builds a set. */
   private def repeats[K](targets: Array[K], from: Int, until: Int): Boolean = {
-    val seen = new java.util.HashSet[K]
-    (from until until).exists(j => !seen.add(targets(j)))
+    val ascending = targets match {
+      case ts: Array[Long] =>
+        var j = from + 1
+        while (j < until && ts(j) > ts(j - 1)) j += 1
+        if (j < until && ts(j) == ts(j - 1)) return true
+        j == until
+      case _ => false
+    }
+    !ascending && {
+      val seen = new java.util.HashSet[K]
+      (from until until).exists(j => !seen.add(targets(j)))
+    }
   }
 }
 

@@ -52,8 +52,8 @@ import org.apache.spark.storage.StorageLevel
  * express. A function that mixes in [[Combining]] has its messages folded
  * per target before the shuffle. The REST registry runs the library ports
  * of graft.algos.compute on it, and GraphAlgorithms runs wcc, kCore,
- * pageRank and HyperBall on it (graft.algos.BlockLoops); bfs, sssp, mssp
- * and label propagation there are still DataFrame loops.
+ * pageRank, HyperBall and kTruss on it (graft.algos.BlockLoops); bfs,
+ * sssp, mssp and label propagation there are still DataFrame loops.
  *
  * Every function the loop passes to an RDD op is a named class (Tasks.scala)
  * and its one action per superstep goes through `Tasks.collect`: Spark's

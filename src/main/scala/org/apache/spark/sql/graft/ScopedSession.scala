@@ -9,17 +9,12 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
  * mutating the shared session — the sibling of [[StatsBarrier]]'s sanctioned
  * `private[sql]` reach (hence the package).
  *
- * Why it exists: two library code paths need a conf that differs from the
- * session default for exactly ONE eager materialization —
- *
- *  - `cpKeyed` (iterative graph loops) must plan its keyed checkpoint
- *    non-adaptively, because under an AdaptiveSparkPlan
- *    `Dataset.localCheckpoint` records `UnknownPartitioning` on its
- *    LogicalRDD leaf and silently discards the layout the whole loop relies
- *    on (verified in the committed r16 loop plan dumps);
- *  - `TriangleCreditSweep.sweep` builds its keyed (u, v) layout with AQE
- *    off, so the non-adaptive plan yields exactly `parts` hash partitions
- *    in the order the sweep's partition-aligned zips consume.
+ * Why it exists: `cpKeyed` (the frontier graph loops) needs a conf that
+ * differs from the session default for exactly ONE eager materialization:
+ * it must plan its keyed checkpoint non-adaptively, because under an
+ * AdaptiveSparkPlan `Dataset.localCheckpoint` records `UnknownPartitioning`
+ * on its LogicalRDD leaf and silently discards the layout the whole loop
+ * relies on (verified in the committed r16 loop plan dumps).
  *
  * The r16 implementation set/restored the conf on the SHARED session
  * (`conf.set` + `finally` restore), which races against concurrent queries

@@ -187,32 +187,6 @@ class SkewSpec extends SparkSpec {
       s"hub-vertex salt skew: max=${hubKeys.max}")
   }
 
-  /** Mini version of the g_skew_ktruss drill graph: star (1,c) 2..n, path,
-    * skip chords, 11-clique on 2..12. */
-  private def trussDrill(n: Int): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    val star = (2 to n).map(c => (1L, c.toLong))
-    val path = (2 until n).map(c => (c.toLong, c + 1L))
-    val skip = (2 until n - 1).map(c => (c.toLong, c + 2L))
-    val clique = for (u <- 2 to 12; v <- u + 1 to 12) yield (u.toLong, v.toLong)
-    (star ++ path ++ skip ++ clique).toDF("src", "dst")
-  }
-
-  test("hub-split kTruss ≡ unsplit; fixpoint = hub∪clique 12-clique") {
-    val edges = trussDrill(600) // hub degree 599 > cap 64 → bucketed support
-    val split = GraphAlgorithms.kTruss(edges, k = 11, hubDegreeCap = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val whole = GraphAlgorithms.kTruss(edges, k = 11, hubDegreeCap = Int.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(split === whole)
-    // closed form: every pair within {1..12}, support 10
-    val expect = (for (u <- 1L to 12L; v <- u + 1 to 12L) yield (u, v) -> 10L).toMap
-    assert(split === expect)
-    // and the peel genuinely engaged the hub-bucket machinery
-    val p = GraphAlgorithms.prepareNeighborhoodFromEdges(edges, hubDegreeCap = 64)
-    assert(p.hubCount === 1L)
-  }
-
   test("saltedPairs ≡ direct pair expansion (chunked mega-groups included)") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -276,69 +250,5 @@ class SkewSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // round 1 removes endpoints 1 and 5; 2 and 4 drop to degree 1
     assert(capped === Map(2L -> 1L, 3L -> 2L, 4L -> 1L))
-  }
-
-  test("incremental kTruss peel ≡ full-recompute peel (random graphs)") {
-    import spark.implicits._
-    // dense-ish random graphs so peel rounds cascade (removals destroy
-    // triangles that push further edges below threshold)
-    for (seed <- Seq(7, 23); k <- Seq(3, 4, 5)) {
-      val rnd = new scala.util.Random(seed)
-      val nv = 40
-      val edges = (for {
-        u <- 1 to nv; v <- u + 1 to nv
-        if rnd.nextDouble() < 0.18
-      } yield (u.toLong, v.toLong)).toDF("src", "dst")
-      def run(frac: Double) =
-        GraphAlgorithms.kTruss(edges, k, rebuildFraction = frac)
-          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val full = run(0.0)          // every round a full support sweep
-      val incr = run(1.0)          // maximally incremental (decrement-only tail)
-      val default = run(0.05)
-      assert(incr === full, s"seed=$seed k=$k incremental != full")
-      assert(default === full, s"seed=$seed k=$k default policy != full")
-    }
-  }
-
-  test("r14 support-ascending kTruss peel ≡ full-sweep reference on " +
-       "randomized R-MAT graphs (burst rounds rebuild adjacency, never " +
-       "re-sweep supports)") {
-    // deterministic R-MAT: the heavy-tailed regime where the first filter
-    // removes a large burst — under the pre-r14 policy that forced full
-    // Σdeg² re-sweeps (62 GB measured at scale 20); the r14 policy must
-    // produce the identical truss through decrement-only waves
-    for ((scale, edges, k) <- Seq((8, 1200L, 3), (9, 3000L, 4), (9, 5000L, 5))) {
-      val g = graft.core.GraphGenerators.rmatGraph(spark, scale, edges)
-      val e = g.edges.select(col("src"), col("dst"))
-      def run(frac: Double, core: Boolean = true) =
-        GraphAlgorithms.kTruss(e, k, rebuildFraction = frac,
-            corePrefilter = core)
-          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      // no prefilter, pure full sweeps: the ground-truth reference
-      val reference = run(0.0, core = false)
-      val waves = run(0.05)      // default policy: prefilter + cost model
-      val noRebuild = run(1.0)   // stale adjacency + validation throughout
-      val noCore = run(0.05, core = false)
-      assert(waves === reference, s"scale=$scale k=$k waves != reference")
-      assert(noRebuild === reference, s"scale=$scale k=$k stale != reference")
-      assert(noCore === reference, s"scale=$scale k=$k no-prefilter != reference")
-    }
-  }
-
-  test("incremental kTruss ≡ full on a HUB-SPLIT graph (bucketed witnesses)") {
-    // the decrement pass's witness arrays come from the aligned-bucket
-    // expansion; removed edges incident to a split hub carry SEVERAL
-    // bucket rows whose per-bucket intersect arrays are disjoint — that
-    // path never fires on the no-hub random graphs above. Drill graph's
-    // 599-degree hub at cap 64 forces it.
-    val edges = trussDrill(600)
-    def run(frac: Double) =
-      GraphAlgorithms.kTruss(edges, k = 5, hubDegreeCap = 64,
-          rebuildFraction = frac)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val full = run(0.0)
-    val incr = run(1.0)
-    assert(incr === full)
-    assert(full.nonEmpty) // k=5 keeps more than the 12-clique (star+chords)
   }
 }

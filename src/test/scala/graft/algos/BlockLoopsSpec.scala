@@ -179,7 +179,7 @@ class BlockLoopsSpec extends SparkSpec {
           BlockLoops.vertexIds(g.vertices).mapPartitions(new OwnLabels), BlockLoops.counted(both),
           numPartitions = n, maxIterations = 101)
         assert(labels.vertices.collect().toMap === unionFind(f))
-        val core = Pregel.run(spark, new DegreePeel(3), both.mapPartitions(new Sources),
+        val core = Pregel.run(spark, new DegreePeel(3), both.mapPartitions(new Sources(0L)),
           BlockLoops.counted(both), numPartitions = n, maxIterations = 101)
         assert(core.vertices.collect().filter(_._2 > 0).toMap === peel(f, 3))
         val ranks = Pregel.run(spark, new DeltaRank(0.0001, 0.15),
@@ -212,11 +212,24 @@ class BlockLoopsSpec extends SparkSpec {
     // closure of its own: a cost per cut, not per round
     def cleaned(body: => Unit): Int =
       ClosureCleanerLog(body).count(!_.contains("writeRDDToCheckpointDirectory"))
-    runs.foreach { case (name, run) =>
-      run(short).collect() // warm
-      val few = cleaned(run(short).collect())
-      val many = cleaned(run(long).collect())
-      assert(many <= few, s"$name: $few closures cleaned on the short path, $many on the long one")
+    def check(name: String, short: () => DataFrame, long: () => DataFrame): Unit = {
+      short().collect() // warm
+      val few = cleaned(short().collect())
+      val many = cleaned(long().collect())
+      assert(many <= few, s"$name: $few closures cleaned on the short input, $many on the long one")
     }
+    runs.foreach { case (name, run) => check(name, () => run(short), () => run(long)) }
+    // kTruss: on a path its degree rounds grow with the length; on a
+    // triangulated m × m grid at k = 4 its support rounds do, the peel
+    // eating the grid one ring per round
+    check("kTruss degree rounds", () => GraphAlgorithms.kTruss(short.edges, 3),
+      () => GraphAlgorithms.kTruss(long.edges, 3))
+    def grid(m: Int): DataFrame = (for {
+      x <- 0 until m; y <- 0 until m
+      (dx, dy) <- Seq((1, 0), (0, 1), (1, 1)) if x + dx < m && y + dy < m
+    } yield ((x * m + y).toLong, ((x + dx) * m + y + dy).toLong)).toDF("src", "dst").localCheckpoint()
+    val (small, large) = (grid(4), grid(12))
+    check("kTruss support rounds", () => GraphAlgorithms.kTruss(small, 4),
+      () => GraphAlgorithms.kTruss(large, 4))
   }
 }

@@ -97,13 +97,32 @@ class KTrussSpec extends SparkSpec {
     }
   }
 
-  test("the 600-vertex hub graph: k = 11 is a 12-clique, k = 5 matches") {
-    val rows = trussDrill(600) // a 599-degree hub
-    val clique = (for (u <- 1L to 12L; v <- u + 1 to 12L) yield (u, v) -> 10L).toMap
-    assert(check(rows, 11, "trussDrill") === clique)
-    // at k = 5 the skip chords (support 2) go first and take the path and
-    // the spokes with them
-    assert(check(rows, 5, "trussDrill") === clique)
+  /** The hub and the 11-clique on 2..12: every edge with support 10. */
+  private val hubClique = (for (u <- 1L to 12L; v <- u + 1 to 12L) yield (u, v) -> 10L).toMap
+
+  test("the 600-vertex hub graph at k = 11 is the hub and clique 12-clique") {
+    assert(check(trussDrill(600), 11, "trussDrill") === hubClique) // a 599-degree hub
+  }
+
+  test("the 600-vertex hub graph at k = 5 matches the sequential peel") {
+    // the skip chords (support 2) go first and take the path and the
+    // spokes with them
+    assert(check(trussDrill(600), 5, "trussDrill") === hubClique)
+  }
+
+  test("k = 3 supports equal brute-force triangle counts on random graphs") {
+    // at k = 3 only triangle-free edges go, and they destroy no triangle:
+    // the truss is every edge in a triangle, with its whole-graph count
+    val rnd = new scala.util.Random(42)
+    for ((nV, nE) <- Seq((30, 120), (60, 400), (120, 900), (40, 300))) {
+      val rows = Seq.fill(nE)((rnd.nextInt(nV).toLong, rnd.nextInt(nV).toLong))
+      val edges = rows.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }.toSet
+      def adj(a: Long, b: Long) = edges((math.min(a, b), math.max(a, b)))
+      val want = edges.iterator.map { case (a, b) =>
+        (a, b) -> (0L until nV).count(w => w != a && w != b && adj(a, w) && adj(b, w)).toLong
+      }.filter(_._2 > 0).toMap
+      assert(truss(rows.toDF("src", "dst"), 3) === want, s"nV=$nV nE=$nE")
+    }
   }
 
   test("self-loops, repeats, both directions and nulls: one simple graph") {
